@@ -9,21 +9,29 @@ status).  Resume = skip stages whose manifest entry is ``done`` with a
 matching input fingerprint and whose output still exists — the parquet
 snapshot plays the role Iceberg snapshots would on a cluster
 (SURVEY.md §4.6).
+
+Lineage is one row per writing task of each stage, read on the driver
+from the parquet footers the stage's write just produced; it launches
+no Spark job.  The workdir must therefore be visible to the driver's
+file system, as it already is for the manifest, the fingerprints and
+the per-sink counts.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import re
 import time
 import uuid
+from collections import Counter
 from dataclasses import dataclass, field
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import SparkSession
 
-from .. import schemas, scorer
 from ..operators import enrich as enrich_op
 from ..operators import fit as fit_op
 from ..operators import parse as parse_op
@@ -31,17 +39,30 @@ from ..operators import route as route_op
 from ..operators import windows as win_op
 
 
+def _data_files(path: str):
+    """(relative name, full path) of every data file under a parquet dir,
+    skipping ``_``/``.`` files (``_SUCCESS``, ``.crc``, ``_sink_counts.json``)
+    the way Spark's readers do."""
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            if not f.startswith(("_", ".")):
+                p = os.path.join(root, f)
+                yield os.path.relpath(p, path), p
+
+
 def _fingerprint(path: str) -> str:
     """Cheap content fingerprint of a parquet dir: relative names + sizes."""
-    acc = []
-    for root, _dirs, files in os.walk(path):
-        for f in sorted(files):
-            if f.startswith(("_", ".")):
-                continue
-            p = os.path.join(root, f)
-            acc.append(f"{os.path.relpath(p, path)}:{os.path.getsize(p)}")
-    import hashlib
-    return hashlib.md5("|".join(sorted(acc)).encode()).hexdigest()
+    acc = sorted(f"{rel}:{os.path.getsize(p)}" for rel, p in _data_files(path))
+    return hashlib.md5("|".join(acc).encode()).hexdigest()
+
+
+# Per-sink counts live inside the routed output: losing the output loses
+# them too, and the leading "_" hides them from Spark readers and from
+# _fingerprint.
+SINK_COUNTS = "_sink_counts.json"
+_LINEAGE_SCHEMA = pa.schema([("stage", pa.string()), ("partition_id", pa.int32()),
+                             ("rows", pa.int64()), ("run_id", pa.string())])
+_PART_TASK = re.compile(r"part-(\d+)-")   # Spark's part-<task id>-<job uuid>...
 
 
 @dataclass
@@ -89,27 +110,43 @@ class PipelineRunner:
 
     # -- lineage ----------------------------------------------------------
     def _lineage(self, stage: str, out_path: str) -> int:
-        """Per-partition lineage rows for the stage's materialized output.
-        Returns the stage's TOTAL row count summed from the (tiny)
-        per-partition aggregation — the single read of the stage output
-        (r2 verdict item 4: stages used to re-scan their output a second
-        time just for the manifest row count)."""
-        df = self.spark.read.parquet(out_path)
-        lin = (df.groupBy(F.spark_partition_id().alias("partition_id"))
-               .agg(F.count("*").alias("rows"))
-               .toPandas())
-        lin["stage"] = stage
-        lin["run_id"] = self.run_id
-        (self.spark.createDataFrame(
-            lin[["stage", "partition_id", "rows", "run_id"]],
-            schema="stage string, partition_id int, rows long, run_id string")
-         .coalesce(1)
-         .write.mode("append").parquet(os.path.join(self.workdir, "lineage")))
-        return int(lin["rows"].sum())
+        """Append one lineage row per writing task of the stage's output
+        to ``workdir/lineage`` and return the stage's total row count
+        (what the manifest records).
 
-    def _stage(self, name: str, fp: str, build, out_name: str | None = None):
+        Rows come from the ``num_rows`` of each part file's parquet
+        footer, summed per task id ``NNNNN`` of ``part-NNNNN-*.parquet``
+        (a partitioned write gives one task several files).  Only the
+        footers are read, on the driver: no Spark job runs."""
+        rows = Counter()
+        for _rel, p in _data_files(out_path):
+            if p.endswith(".parquet"):
+                task = _PART_TASK.match(os.path.basename(p))
+                if task is None:
+                    raise ValueError(f"{p}: not a part-NNNNN- parquet file")
+                rows[int(task.group(1))] += pq.read_metadata(p).num_rows
+        parts = sorted(rows)
+        table = pa.table({"stage": [stage] * len(parts), "partition_id": parts,
+                          "rows": [rows[t] for t in parts],
+                          "run_id": [self.run_id] * len(parts)},
+                         schema=_LINEAGE_SCHEMA)
+        lin_dir = os.path.join(self.workdir, "lineage")
+        os.makedirs(lin_dir, exist_ok=True)
+        name = f"part-{self.run_id}-{stage}-{uuid.uuid4().hex[:8]}.parquet"
+        tmp = os.path.join(lin_dir, "." + name)   # hidden until complete
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(lin_dir, name))
+        return sum(rows.values())
+
+    def _stage(self, name: str, fp: str, build, out_name: str | None = None,
+               done_file: str = ""):
+        """Run ``build(out)`` unless the manifest marks the stage done for
+        ``fp`` and its output is still there.  ``done_file`` names a file
+        inside the output that ``build`` writes last; without it the
+        output counts as lost and the stage reruns."""
         out = os.path.join(self.workdir, out_name or name)
-        if self.manifest.is_done(name, fp) and os.path.exists(out):
+        if self.manifest.is_done(name, fp) and \
+                os.path.exists(os.path.join(out, done_file)):
             return out
         t0 = time.time()
         build(out)
@@ -124,11 +161,17 @@ class PipelineRunner:
         pages = self.spark.read.parquet(self.pages_path)
 
         # fit: frozen catalog snapshot
+        fitted = []
+
         def _fit(out):
             cat = fit_op.fit_catalog(pages, sample_fraction=self.fit_sample)
             fit_op.write_catalog(self.spark, cat, out)
+            fitted.append(cat)
         cat_path = self._stage("fit", pages_fp, _fit, "catalog")
-        catalog_rows = fit_op.read_catalog(self.spark, cat_path)
+        # the snapshot is read back only on resume; a fit that ran here
+        # already holds the same rows
+        catalog_rows = fitted[0] if fitted else \
+            fit_op.read_catalog(self.spark, cat_path)
         num_classes = len(catalog_rows)
 
         # parse: map-side only; html pruned by column selection
@@ -160,11 +203,12 @@ class PipelineRunner:
             routed = route_op.with_severity(scored)
             route_op.write_sinks(routed, out)
             counts = route_op.sink_counts(self.spark.read.parquet(out))
-            counts.toPandas().to_json(
-                os.path.join(self.workdir, "sink_counts.json"), orient="records")
-        routed_path = self._stage("route", _fingerprint(scored_path), _route, "routed")
+            counts.toPandas().to_json(os.path.join(out, SINK_COUNTS),
+                                      orient="records")
+        routed_path = self._stage("route", _fingerprint(scored_path), _route,
+                                  "routed", done_file=SINK_COUNTS)
 
-        with open(os.path.join(self.workdir, "sink_counts.json")) as f:
+        with open(os.path.join(routed_path, SINK_COUNTS)) as f:
             counts = json.load(f)
         return {
             "run_id": self.run_id,

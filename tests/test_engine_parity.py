@@ -6,7 +6,9 @@ Asserts, on the same deterministic pages corpus:
   text (BASELINE.json per-row invariant)
 - identical per-severity routed counts AND routed row sets (left-anti
   empty both directions — north rule acceptance)
-- checkpoint resume: second run executes zero stages
+- checkpoint resume: second run executes zero stages; a lost route
+  output (or its per-sink counts) reruns route alone
+- lineage: one row per writing task, read from parquet footers
 - property 3c: catalog invariant to input partition count
 """
 
@@ -128,11 +130,103 @@ def test_resume_skips_done_stages(spark, workspace):
     assert out["sink_counts"] == workspace["result"]["sink_counts"]
 
 
+def _read_lineage(work):
+    """The lineage table as pandas, read by pyarrow (as the benchmark's
+    lineage_skew does), in a fixed row order."""
+    import pyarrow.parquet as pq
+    return (pq.read_table(os.path.join(work, "lineage")).to_pandas()
+            .sort_values(["run_id", "stage", "partition_id"])
+            .reset_index(drop=True))
+
+
+def _task_ids(path):
+    """Writing-task ids NNNNN of the part-NNNNN-*.parquet files under path."""
+    return {int(f.split("-")[1]) for _root, _dirs, files in os.walk(path)
+            for f in files if f.startswith("part-") and f.endswith(".parquet")}
+
+
 def test_lineage_written(spark, workspace):
-    lin = spark.read.parquet(str(workspace["base"] / "work" / "lineage"))
-    stages = {r["stage"] for r in lin.select("stage").distinct().collect()}
-    assert {"fit", "parse", "enrich", "score", "route"} <= stages
-    assert lin.filter("rows < 0").count() == 0
+    """One lineage row per writing task of every stage: the rows sum to
+    the manifest's count and to the output's count, the partition ids
+    are the part files' task ids, and Spark and pyarrow read the same
+    table with the unchanged schema."""
+    work = str(workspace["base"] / "work")
+    res = workspace["result"]
+    manifest = workspace["runner"].manifest.entries
+    lin_spark = spark.read.parquet(os.path.join(work, "lineage"))
+    assert lin_spark.dtypes == [("stage", "string"), ("partition_id", "int"),
+                                ("rows", "bigint"), ("run_id", "string")]
+    got = (lin_spark.toPandas().sort_values(["run_id", "stage", "partition_id"])
+           .reset_index(drop=True))
+    lin = _read_lineage(work)
+    pd.testing.assert_frame_equal(got, lin)
+    lin = lin[lin["run_id"] == res["run_id"]]
+    assert set(lin["stage"]) == set(PipelineRunner.STAGES)
+    assert (lin["rows"] >= 0).all()
+    outputs = {"fit": res["catalog_path"], "parse": res["parsed_path"],
+               "enrich": res["enriched_path"], "score": res["scored_path"],
+               "route": res["routed_path"]}
+    for stage, out in outputs.items():
+        g = lin[lin["stage"] == stage]
+        assert int(g["rows"].sum()) == manifest[stage]["rows"] == \
+            spark.read.parquet(out).count(), stage
+        assert set(g["partition_id"]) == _task_ids(out), stage
+
+
+def test_resume_after_lost_sink_counts(spark, workspace, tmp_path):
+    """Losing the routed output's per-sink counts loses the route stage:
+    resume reruns route alone, gets the same counts, and appends lineage
+    rows only for route and only under its own run id."""
+    import shutil
+    work = str(tmp_path / "work")
+    shutil.copytree(str(workspace["base"] / "work"), work)
+    before = _read_lineage(work)
+    os.remove(os.path.join(work, "routed", "_sink_counts.json"))
+    r2 = PipelineRunner(spark, workspace["pages_path"], work)
+    out = r2.run()
+    assert out["executed"] == ["route"]
+    assert out["sink_counts"] == workspace["result"]["sink_counts"]
+    after = _read_lineage(work)
+    old = after[after["run_id"] != r2.run_id].reset_index(drop=True)
+    pd.testing.assert_frame_equal(old, before)
+    new = after[after["run_id"] == r2.run_id]
+    assert set(new["stage"]) == {"route"}
+    assert int(new["rows"].sum()) == r2.manifest.entries["route"]["rows"]
+
+
+def test_fitted_rows_share_catalog_token_with_snapshot(spark, workspace):
+    """run() parses with the rows its fit returned and reads the snapshot
+    back only on resume; both must give the same catalog token, so the
+    worker-side Matcher cache still hits after a resume."""
+    from ai_log_analyzer_spark.operators import parse as parse_op
+    pages = spark.read.parquet(workspace["pages_path"])
+    fitted = fit_op.fit_catalog(pages)
+    snapshot = fit_op.read_catalog(spark, workspace["result"]["catalog_path"])
+    assert parse_op._catalog_token(fitted) == parse_op._catalog_token(snapshot)
+
+
+def test_lineage_launches_no_spark_job(spark, workspace, tmp_path):
+    """Lineage bookkeeping reads parquet footers on the driver: no Spark
+    job may run under its job group (a Spark read under another group is
+    the positive control that job groups are tracked at all)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    parsed = workspace["result"]["parsed_path"]
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    try:
+        sc.setJobGroup("lineage-guard-control", "positive control")
+        spark.read.parquet(parsed).count()
+        sc.setJobGroup("lineage-guard", "lineage bookkeeping")
+        rows = PipelineRunner(spark, workspace["pages_path"],
+                              str(tmp_path / "work"))._lineage("parse", parsed)
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    assert tracker.getJobIdsForGroup("lineage-guard-control")
+    assert tracker.getJobIdsForGroup("lineage-guard") == []
+    assert rows == workspace["runner"].manifest.entries["parse"]["rows"]
 
 
 def test_fit_partition_invariance(spark, pages_df, oracle_result):
