@@ -1,93 +1,55 @@
 """Sequence windows + frozen-scorer stage (SURVEY.md O29/O32/O33, D6-D8).
 
-The reference's DataLoader windowing (/root/reference/ailoganalyzer/
-dataset/dataset.py:73-123) re-expressed relationally:
+The reference's DataLoader windowing (ailoganalyzer/dataset/
+dataset.py:73-123): per host series ordered by seq_no, the
+window ending at position j is ids[j-w+1..j] and its label is
+ids[j+2] (the reference's off-by-one lookahead, dataset.py:77 —
+replicated).  That rule lives in ONE function, ``score_series``, which
+both the batch stage below and the stateful stream scorer
+(``streaming/stream_pipeline.score_stream_stateful``) call:
 
-  matched events ──shuffle by host──► Window.partitionBy(host).orderBy(seq_no)
-      collect_list over rowsBetween(-(w-1), 0)   = the sliding window
-      lead(template_id, 2)                        = the label (the
-        reference's off-by-one lookahead, dataset.py:77 — replicated)
-  ──► filter complete windows ──► scorer pandas UDF (Arrow-batched numpy)
+  matched events ──xxhash64(host) bucket exchange──► applyInPandas
+      per host: numpy sort by seq_no ──► score_series (strided window
+      views + lead-2 labels ──► frozen scorer)
+  ──► broadcast join restores the host string
 
-This is shuffle #1 of the flagship DAG: one hash exchange on ``host``
-keeps every series whole on one partition — no cross-partition window
-stitching.  The count-vector + autoencoder + top-k all happen inside
-one vectorized UDF batch (count vectors are built densely ONLY inside
-the batch, never shuffled — spill safety per SURVEY.md §4.4).
+This is shuffle #1 of the flagship DAG: one hash exchange on the host
+key keeps every series whole on one partition — no cross-partition
+window stitching.  The count-vector + autoencoder + top-k all happen
+inside one vectorized batch (count vectors are built densely ONLY
+inside the batch, never shuffled — spill safety per SURVEY.md §4.4).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import schemas, scorer
+from .. import scorer
 
 
-def window_samples(matched_events: DataFrame,
-                   w: int = scorer.WINDOW_SIZE) -> DataFrame:
-    win = (Window.partitionBy("host").orderBy("seq_no")
-           .rowsBetween(-(w - 1), 0))
-    lead_w = Window.partitionBy("host").orderBy("seq_no")
-    return (
-        matched_events
-        .select("host", "seq_no", "url", "warc_ts", "template_id")
-        .withColumn("window_ids", F.collect_list("template_id").over(win))
-        .withColumn("label_id", F.lead("template_id", scorer.LABEL_LEAD).over(lead_w))
-        .filter((F.size("window_ids") == w) & F.col("label_id").isNotNull())
-    )
+def score_series(ids: np.ndarray, num_classes: int, w: int, lead: int,
+                 first_end: int):
+    """Score every window end ``j`` in ``[first_end, len(ids) - lead)``
+    of one seq-ordered id series: window ``ids[j-w+1..j]`` (a zero-copy
+    strided view), label ``ids[j + lead]``.  ``first_end >= w - 1``.
 
-
-def score_windows(samples: DataFrame, num_classes: int,
-                  repartition: bool = False) -> DataFrame:
-    """Adds anomaly_score / is_anomaly via the frozen numpy scorer.
-
-    Scalar struct-returning pandas_udf: ONLY (window_ids, label_id)
-    cross the JVM↔Python Arrow boundary — keys/urls/timestamps stay in
-    the JVM, and the 10-wide window arrays are consumed here, never
-    shuffled or written downstream.
-
-    The scorer is compute-bound per row, so its partitions must be
-    sized for CPU, not bytes (AQE byte-coalescing is off in conf.py).
-    ``repartition=True`` adds an explicit round-robin shuffle first —
-    use only when series-key cardinality is below the core count."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    result = T.StructType([
-        T.StructField("anomaly_score", T.DoubleType(), False),
-        T.StructField("is_anomaly", T.BooleanType(), False),
-    ])
-
-    bw = samples.sparkSession.sparkContext.broadcast(
-        scorer.load_weights(num_classes))
-
-    @pandas_udf(result)
-    def _score(batches: Iterator[Tuple[pd.Series, pd.Series]]) -> Iterator[pd.DataFrame]:
-        scorer.seed_weight_cache(num_classes, bw.value)
-        for window_ids, label_id in batches:
-            if len(label_id) == 0:
-                yield pd.DataFrame({"anomaly_score": pd.Series(dtype="float64"),
-                                    "is_anomaly": pd.Series(dtype="bool")})
-                continue
-            win = np.stack(window_ids.to_numpy()).astype(np.int64)
-            labels = label_id.to_numpy(dtype=np.int64)
-            err, anom = scorer.score(win, labels, num_classes)
-            yield pd.DataFrame({"anomaly_score": err, "is_anomaly": anom})
-
-    if repartition:
-        n = samples.sparkSession.sparkContext.defaultParallelism
-        samples = samples.repartition(n)
-    return (samples
-            .withColumn("_s", _score(F.col("window_ids"), F.col("label_id")))
-            .select("host", "seq_no", "url", "warc_ts", "template_id",
-                    "label_id",
-                    F.col("_s.anomaly_score").alias("anomaly_score"),
-                    F.col("_s.is_anomaly").alias("is_anomaly")))
+    The batch stage scores a whole series (``first_end = w - 1``); the
+    stream scorer scores the ends whose label arrived in the current
+    micro-batch, over its stored tail plus the new rows.  Returns
+    ``(ends, labels, anomaly_score, is_anomaly)`` with ``ends`` as
+    positions in ``ids``, or None when no end is in range."""
+    last = len(ids) - lead
+    if last <= first_end:
+        return None
+    ends = np.arange(first_end, last)
+    win = np.lib.stride_tricks.sliding_window_view(ids, w)[
+        first_end - w + 1:last - w + 1]
+    labels = ids[ends + lead]
+    err, anom = scorer.score(win, labels, num_classes)
+    return ends, labels, err, anom
 
 
 DEFAULT_CARRY = ("url", "warc_ts")
@@ -95,10 +57,9 @@ DEFAULT_CARRY = ("url", "warc_ts")
 _CARRY_TYPES = {"url": "string", "warc_ts": "timestamp"}
 
 
-def _grouped_schema(carry: tuple, compact: bool = False) -> str:
+def _grouped_schema(carry: tuple) -> str:
     carry_sql = "".join(f"{c} {_CARRY_TYPES[c]}, " for c in carry)
-    key = "host_key long" if compact else "host string"
-    return (f"{key}, seq_no long, {carry_sql}"
+    return (f"host_key long, seq_no long, {carry_sql}"
             "template_id long, label_id long, "
             "anomaly_score double, is_anomaly boolean")
 
@@ -106,19 +67,15 @@ def _grouped_schema(carry: tuple, compact: bool = False) -> str:
 def _group_slices(keys: np.ndarray):
     """Yield index arrays for each equal-key group in O(N log N) total
     (r2 verdict item 1c: the old per-host ``codes == hi`` rescan was
-    O(H·N) — quadratic when millions of series share a bucket).  Object
-    keys are factorized to int codes first; int keys sort directly."""
-    if keys.dtype == object:
-        codes, _ = pd.factorize(keys, sort=False)
-    else:
-        codes = keys
-    order = np.argsort(codes, kind="stable")
-    sorted_codes = codes[order]
-    if not len(sorted_codes):
+    O(H·N) — quadratic when millions of series share a bucket).  The
+    int host keys sort directly."""
+    order = np.argsort(keys, kind="stable")
+    sorted_keys = keys[order]
+    if not len(sorted_keys):
         return
-    bounds = np.flatnonzero(sorted_codes[1:] != sorted_codes[:-1]) + 1
+    bounds = np.flatnonzero(sorted_keys[1:] != sorted_keys[:-1]) + 1
     starts = np.concatenate(([0], bounds))
-    ends = np.concatenate((bounds, [len(sorted_codes)]))
+    ends = np.concatenate((bounds, [len(sorted_keys)]))
     for s, e in zip(starts, ends):
         yield order[s:e]
 
@@ -126,22 +83,19 @@ def _group_slices(keys: np.ndarray):
 def _score_host_arrays(cols: dict, num_classes: int, w: int, lead: int,
                        carry: tuple = DEFAULT_CARRY):
     """Score ONE host series given column arrays (numpy).  Returns a dict
-    of output arrays or None when the series is too short.  This is the
-    bit-exact shared per-host kernel: the single-node oracle and the
-    Spark stage both call scorer.score on the identical per-host window
-    matrix, so no batching/blocking difference can leak into floats."""
-    n = len(cols["seq_no"])
-    if n < w + lead:
-        return None
+    of output arrays or None when the series is too short.  The single-
+    node oracle and the Spark stage both call scorer.score on the
+    identical per-host window matrix, so no batching/blocking difference
+    can leak into floats."""
     order = np.argsort(cols["seq_no"], kind="stable")
     ids = cols["template_id"][order]
-    ends = np.arange(w - 1, n - lead)
-    win = np.lib.stride_tricks.sliding_window_view(ids, w)[:len(ends)]
-    labels = ids[ends + lead]
-    err, anom = scorer.score(win, labels, num_classes)
+    got = score_series(ids, num_classes, w, lead, first_end=w - 1)
+    if got is None:
+        return None
+    ends, labels, err, anom = got
     take = order[ends]
     out = {
-        "host": cols["host"][take],
+        "host_key": cols["host_key"][take],
         "seq_no": cols["seq_no"][take],
         "template_id": ids[ends],
         "label_id": labels,
@@ -161,40 +115,35 @@ HOST_BROADCAST_LIMIT = 10_000_000
 
 
 def window_score_grouped(matched_events: DataFrame, num_classes: int,
+                         host_lookup: DataFrame,
                          w: int = scorer.WINDOW_SIZE,
                          n_buckets: int | None = None,
                          carry: tuple = DEFAULT_CARRY,
-                         host_lookup: DataFrame | None = None,
                          n_hosts_hint: int | None = None,
                          series_parts: int | None = None) -> DataFrame:
     """Fused windows+score: ``applyInPandas`` over HOST BUCKETS.
 
-    Replaces collect_list-over-Window + scalar scorer UDF for the
-    flagship DAG: the 10-wide window arrays (10x duplicated ids) never
-    exist JVM-side, the sort happens in numpy instead of the JVM sorter,
-    and windows are zero-copy strided views.  Round-2 probes: the old
-    two-step stage scaled 0.41 from 8->32 cores and dominated e2e wall;
-    per-HOST applyInPandas paid ~5ms of Arrow/group overhead per series,
-    so the shuffle key is a coarse bucket pmod(xxhash64(host), P) and
-    hosts are sub-grouped in pandas — per-call overhead amortizes over
-    ~rows/P rows regardless of how many (millions, at web scale) series
-    exist.  P defaults to 16x parallelism and is the explicit scale knob:
-    at 100 TB pick P so each bucket (~total_rows/P) fits executor memory.
+    The window arrays (w-times duplicated ids) never exist JVM-side,
+    the sort happens in numpy instead of the JVM sorter, and windows
+    are zero-copy strided views.  Per-HOST applyInPandas paid ~5ms of
+    Arrow/group overhead per series, so the shuffle key is a coarse
+    bucket pmod(xxhash64(host), P) and hosts are sub-grouped in pandas
+    — per-call overhead amortizes over ~rows/P rows regardless of how
+    many (millions, at web scale) series exist.  P defaults to 16x
+    parallelism and is the explicit scale knob: at 100 TB pick P so
+    each bucket (~total_rows/P) fits executor memory.
 
-    COMPACT SHUFFLE (r2 verdict item 1 — this stage was memory-
-    bandwidth-bound at 0.617 scaling, tracking the box's memcpy
-    control): when ``host_lookup`` is given, the exchange and the Arrow
-    hop carry ``xxhash64(host)`` (8-byte int) instead of the host
-    string, and the int key also makes the in-batch grouping a pure
-    integer sort (no object-hash factorize).  The host string is
-    restored AFTER scoring via a join against the distinct-host
-    dictionary built from ``host_lookup`` — pass a frame whose plan is
-    cheap to rescan (the raw pages/parsed table, NOT a plan containing
-    the parse UDF) and that contains every host in ``matched_events``.
-    The every-host contract is enforced loudly: the restore is a LEFT
-    join and a missing host raises at execution time instead of
-    silently dropping that host's scored rows (round-3 advice item 2).
-    The dictionary is broadcast only below ``HOST_BROADCAST_LIMIT``
+    COMPACT SHUFFLE: the exchange and the Arrow hop carry
+    ``xxhash64(host)`` (8-byte int) instead of the host string (the
+    stage is memory-bandwidth-bound), and the int key makes the
+    in-batch grouping a pure integer sort.  ``host_lookup`` is
+    REQUIRED: the host string is restored after scoring via a join
+    against the distinct-host dictionary built from it — pass a frame
+    whose plan is cheap to rescan (the raw pages/parsed table, NOT a
+    plan containing the parse UDF) and that contains every host in
+    ``matched_events``.  A missing host raises at execution time
+    instead of silently dropping that host's scored rows.  The
+    dictionary is broadcast only below ``HOST_BROADCAST_LIMIT``
     distinct hosts — pass ``n_hosts_hint`` (e.g. an approx_count_distinct
     from an earlier pass) above ~10⁷ to switch the restore to a shuffle
     hash join; past that scale the broadcast would OOM executors long
@@ -206,22 +155,20 @@ def window_score_grouped(matched_events: DataFrame, num_classes: int,
     SparkContext.broadcast (O(C·LOGIT_RANK) bytes) — workers never
     regenerate them (round-3 verdict item 1).
 
-    Per-host scoring calls the identical kernel the single-node oracle
-    uses on the identical per-host arrays — bit-exact parity by
-    construction (tests/test_engine_parity.py)."""
+    Per-host scoring runs ``score_series`` on the same per-host window
+    matrix the single-node oracle builds — bit-exact parity
+    (tests/test_engine_parity.py)."""
     lead = scorer.LABEL_LEAD
     spark = matched_events.sparkSession
     if n_buckets is None:
         # 16x parallelism: buckets >> shuffle partitions so the balls-in-
         # bins collision skew stays ~1.2x (4x gave max-load stragglers)
         n_buckets = spark.sparkContext.defaultParallelism * 16
-    compact = host_lookup is not None
 
-    key_col = "host_key" if compact else "host"
-    in_cols = [key_col, "seq_no", *carry, "template_id"]
-    out_cols = [key_col, "seq_no", *carry, "template_id", "label_id",
+    in_cols = ["host_key", "seq_no", *carry, "template_id"]
+    out_cols = ["host_key", "seq_no", *carry, "template_id", "label_id",
                 "anomaly_score", "is_anomaly"]
-    _empty_dtype = {"host": object, "host_key": "int64", "seq_no": "int64",
+    _empty_dtype = {"host_key": "int64", "seq_no": "int64",
                     "url": object, "warc_ts": "datetime64[us]",
                     "template_id": "int64", "label_id": "int64",
                     "anomaly_score": "float64", "is_anomaly": "bool"}
@@ -233,10 +180,8 @@ def window_score_grouped(matched_events: DataFrame, num_classes: int,
         cols = {c: pdf[c].to_numpy() for c in in_cols}
         cols["seq_no"] = cols["seq_no"].astype(np.int64, copy=False)
         cols["template_id"] = cols["template_id"].astype(np.int64, copy=False)
-        # the kernel is key-name-agnostic: feed host_key through "host"
-        cols["host"] = cols.pop(key_col)
         outs = []
-        for pos in _group_slices(cols["host"]):
+        for pos in _group_slices(cols["host_key"]):
             got = _score_host_arrays(
                 {c: v[pos] for c, v in cols.items()}, num_classes, w, lead,
                 carry=carry)
@@ -246,19 +191,13 @@ def window_score_grouped(matched_events: DataFrame, num_classes: int,
             return pd.DataFrame({c: pd.Series(dtype=_empty_dtype[c])
                                  for c in out_cols})
         return pd.DataFrame(
-            {c: np.concatenate([o["host" if c == key_col else c] for o in outs])
-             for c in out_cols})
+            {c: np.concatenate([o[c] for o in outs]) for c in out_cols})
 
-    ev = matched_events
-    if compact:
-        # template_id as int32 through the exchange (catalog cardinality
-        # ≪ 2^31); restored to long by the UDF output schema
-        ev = ev.select(F.xxhash64("host").alias("host_key"), "seq_no",
-                       *carry, F.col("template_id").cast("int").alias("template_id"))
-        bucket = F.pmod(F.col("host_key"), F.lit(n_buckets)).cast("int")
-    else:
-        ev = ev.select(*in_cols)
-        bucket = F.pmod(F.xxhash64("host"), F.lit(n_buckets)).cast("int")
+    # template_id as int32 through the exchange (catalog cardinality
+    # ≪ 2^31); restored to long by the UDF output schema
+    ev = matched_events.select(
+        F.xxhash64("host").alias("host_key"), "seq_no", *carry,
+        F.col("template_id").cast("int").alias("template_id"))
 
     # r6 (guide §2.5/§2.6): the scorer is CPU-bound per host series.
     # When the SERIES-KEY cardinality is far below the core count (the
@@ -270,20 +209,19 @@ def window_score_grouped(matched_events: DataFrame, num_classes: int,
     # partitions).  ``series_parts`` lets such callers widen the SAME
     # single exchange (an explicit repartition on the bucket key
     # satisfies the groupBy's clustered-distribution requirement —
-    # plan-pinned one Exchange) so collisions become rare.  It stays
-    # OFF by default: with many series (≥ cores — the common web-scale
-    # case) the extra reduce tasks only add per-task Arrow/worker
-    # overhead, measured +1.2 s on the 100-host 400k-row pipeline bench
-    # at local[32] (2.0 s → 3.2 s) for zero straggler benefit.
-    scored_in = ev.withColumn("_b", bucket)
+    # one Exchange, pinned by tests/test_plan_shapes.py) so collisions
+    # become rare.  It stays OFF by default: with many series (≥ cores
+    # — the common web-scale case) the extra reduce tasks only add
+    # per-task Arrow/worker overhead, measured +1.2 s on the 100-host
+    # 400k-row pipeline bench at local[32] (2.0 s → 3.2 s) for zero
+    # straggler benefit.
+    scored_in = ev.withColumn(
+        "_b", F.pmod(F.col("host_key"), F.lit(n_buckets)).cast("int"))
     if series_parts is not None:
         scored_in = scored_in.repartition(series_parts, "_b")
     scored = (scored_in
               .groupBy("_b")
-              .applyInPandas(lambda key, pdf: _fn(pdf.drop(columns=["_b"])),
-                             schema=_grouped_schema(carry, compact)))
-    if not compact:
-        return scored
+              .applyInPandas(_fn, schema=_grouped_schema(carry)))
     hosts = (host_lookup.select("host").distinct()
              .withColumn("host_key", F.xxhash64("host")))
     if n_hosts_hint is None or n_hosts_hint <= HOST_BROADCAST_LIMIT:

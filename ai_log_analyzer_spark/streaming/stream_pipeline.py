@@ -1,9 +1,10 @@
-"""Structured-Streaming variant of the parse → enrich → route DAG.
+"""Structured-Streaming variant of the parse → windows+score → route DAG.
 
 The reference is batch-only (reads a finite file; SURVEY.md §2.8), so
-this is additive capability: the SAME frozen-catalog parse kernel and
-severity routing applied to a file-source stream with event-time
-tumbling-window counts and a watermark for late data.
+this is additive capability: the SAME frozen-catalog parse kernel,
+the SAME per-series window kernel (``operators/windows.score_series``)
+and severity routing applied to a file-source stream, plus event-time
+window counts and a watermarked stream-stream join.
 
 Design: the catalog is frozen (fit runs as the batch job), so streaming
 needs no stateful mining — ``mapInPandas`` works unchanged on a
@@ -20,7 +21,7 @@ from pyspark.sql import functions as F
 
 from .. import schemas
 from ..operators import parse as parse_op
-from ..operators import route as route_op
+from ..operators.windows import score_series
 
 
 def _stage_dir_for(events_path: str) -> tuple[str, str | None]:
@@ -84,25 +85,6 @@ def read_pages_stream(spark: SparkSession, path: str,
     return reader.parquet(path)
 
 
-def parse_stream(pages_stream: DataFrame, catalog_rows: pd.DataFrame) -> DataFrame:
-    """Frozen-catalog parse on a stream — identical kernel to batch."""
-    return parse_op.parse_pages(pages_stream, catalog_rows)
-
-
-def windowed_template_counts(parsed_stream: DataFrame,
-                             window: str = "5 minutes",
-                             watermark: str = "10 minutes") -> DataFrame:
-    """Event-time tumbling counts per template with late-data watermark
-    (SURVEY.md O34 streaming form)."""
-    return (parsed_stream
-            .withWatermark("warc_ts", watermark)
-            .groupBy(F.window("warc_ts", window).alias("win"), "template_id")
-            .agg(F.count("*").alias("n"))
-            .select(F.col("win.start").alias("window_start"),
-                    F.col("win.end").alias("window_end"),
-                    "template_id", "n"))
-
-
 def windowed_event_counts_available_now(spark: SparkSession, events_path: str,
                                         window: str = "1 hour") -> DataFrame:
     """Run event-time tumbling-window counts over the events table AS A
@@ -114,8 +96,8 @@ def windowed_event_counts_available_now(spark: SparkSession, events_path: str,
     (append mode would hold back windows the watermark hasn't passed,
     which for a finite corpus means the trailing windows never flush).
     No watermark here: events.ts is TIMESTAMP_NTZ, which Spark's
-    watermark rejects, and complete mode needs none — the late-data
-    watermark pattern lives in ``windowed_template_counts`` above."""
+    watermark rejects, and complete mode needs none — the watermarked
+    pattern lives in ``interval_join_counts_available_now`` below."""
     import uuid
 
     schema = spark.read.parquet(events_path).schema
@@ -141,15 +123,17 @@ def score_stream_stateful(matched_stream: DataFrame, num_classes: int,
     (seq_no, template_id) pairs).  Each micro-batch appends its rows to
     the tail, scores every window end whose lead-label has NOW arrived,
     and keeps the new tail — so a window spanning two micro-batches is
-    scored exactly once, when its label lands.  The per-end result is
-    the same frozen-scorer kernel the batch stage uses; batch↔stream
+    scored exactly once, when its label lands.  The windows and labels
+    come from ``score_series``, the kernel the batch stage uses; batch↔stream
     parity is pinned in tests/test_streaming_stateful.py (decisions
     exact; scores to float32-GEMM tolerance, since BLAS accumulation
     order varies with batch shape).
 
     Requires per-host seq_no order across micro-batches (file source
     with ascending files / maxFilesPerTrigger) — the same contract the
-    reference's serial file reader provides."""
+    reference's serial file reader provides.  A host row arriving at or
+    below the stored tail's last seq_no (e.g. a backfill file landing
+    late) raises instead of splicing old and new rows into one window."""
     import numpy as np
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -175,20 +159,22 @@ def score_stream_stateful(matched_stream: DataFrame, num_classes: int,
         else:
             prev_seen = 0
             tail_seq = tail_ids = np.empty(0, dtype=np.int64)
+        if len(tail_seq) and len(new_seq) and new_seq[0] <= tail_seq[-1]:
+            raise ValueError(
+                f"score_stream_stateful: host {host!r} received seq_no "
+                f"{int(new_seq[0])} at or below its last seen seq_no "
+                f"{int(tail_seq[-1])} — micro-batches must arrive in "
+                f"per-host seq_no order")
         full_seq = np.concatenate([tail_seq, new_seq])
         full_ids = np.concatenate([tail_ids, new_ids])
         offset = prev_seen - len(tail_seq)      # global index of full[0]
-        n_total = prev_seen + len(new_seq)
-        ends_g = np.arange(max(w - 1, prev_seen - lead), n_total - lead)
-        if len(ends_g):
-            ends_l = ends_g - offset
-            win = np.lib.stride_tricks.sliding_window_view(full_ids, w)
-            winm = win[ends_l - w + 1]
-            labels = full_ids[ends_l + lead]
-            err, anom = scorer.score(winm, labels, num_classes)
+        got = score_series(full_ids, num_classes, w, lead,
+                           first_end=max(w - 1, prev_seen - lead) - offset)
+        if got is not None:
+            ends, labels, err, anom = got
             out = pd.DataFrame({
-                "host": host, "seq_no": full_seq[ends_l],
-                "template_id": full_ids[ends_l], "label_id": labels,
+                "host": host, "seq_no": full_seq[ends],
+                "template_id": full_ids[ends], "label_id": labels,
                 "anomaly_score": err, "is_anomaly": anom})
         else:
             out = pd.DataFrame({"host": pd.Series(dtype=object),
@@ -198,7 +184,7 @@ def score_stream_stateful(matched_stream: DataFrame, num_classes: int,
                                 "anomaly_score": pd.Series(dtype="float64"),
                                 "is_anomaly": pd.Series(dtype="bool")})
         keep = min(len(full_ids), w + lead - 1)
-        state.update((int(n_total),
+        state.update((int(prev_seen + len(new_seq)),
                       full_seq[len(full_seq) - keep:].tolist(),
                       full_ids[len(full_ids) - keep:].tolist()))
         yield out
@@ -210,26 +196,6 @@ def score_stream_stateful(matched_stream: DataFrame, num_classes: int,
                                     "append", GroupStateTimeout.NoTimeout))
 
 
-def run_stateful_scores_available_now(spark: SparkSession, pages_path: str,
-                                      catalog_rows: pd.DataFrame,
-                                      num_classes: int,
-                                      max_files_per_trigger: int | None = None
-                                      ) -> DataFrame:
-    """Streaming flagship: file-source pages → id-only parse → stateful
-    incremental scorer → memory sink (AvailableNow); returns the scored
-    rows once the stream drains."""
-    import uuid
-
-    stream = read_pages_stream(spark, pages_path, max_files_per_trigger)
-    parsed = parse_op.parse_template_ids(stream, catalog_rows)
-    scored = score_stream_stateful(
-        parsed.filter(F.col("template_id").isNotNull()), num_classes)
-    name = f"sss_{uuid.uuid4().hex[:12]}"
-    q = (scored.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    return _drain_memory_sink(spark, q, name)
-
-
 def run_stateful_scores_to_parquet(spark: SparkSession, pages_path: str,
                                    catalog_rows: pd.DataFrame,
                                    num_classes: int,
@@ -238,8 +204,7 @@ def run_stateful_scores_to_parquet(spark: SparkSession, pages_path: str,
                                    ) -> None:
     """Scale-path sink for the stateful streaming scorer (round-3
     verdict item 4): parquet file sink + checkpoint, zero driver-side
-    collect — the memory-sink form above stays test/driver-contract
-    only.  Restart-safe: re-running after new page files land resumes
+    collect.  Restart-safe: re-running after new page files land resumes
     from the checkpoint (processed files + per-host scorer state both
     recover) and appends only the newly scored rows; a mid-corpus
     restart therefore yields the identical row set the batch stage
@@ -312,7 +277,7 @@ def run_available_now(pages_path: str, catalog_rows: pd.DataFrame,
     per-severity-partitioned sink, then stop (deterministic batch-like
     semantics via AvailableNow; restart-safe through the checkpoint)."""
     stream = read_pages_stream(spark, pages_path)
-    parsed = parse_stream(stream, catalog_rows)
+    parsed = parse_op.parse_pages(stream, catalog_rows)
     # per-event severity proxy for the streaming path: dead-letter vs ok
     routed = parsed.withColumn(
         "severity", F.when(F.col("template_id").isNull(), "dead").otherwise("ok"))

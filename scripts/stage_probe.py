@@ -2,11 +2,17 @@
 dies.  One (stage, cores) measurement per process, taskset-pinned by the
 caller.  Stages:
 
-  scan    - parquet scan of text column + JVM-side length sum (no Python)
-  arrow   - identity pandas UDF (text in, length out): Arrow + worker RT
-  parse   - the real parse UDF, result counted (no downstream)
-  winscore- windows + scorer from a pre-parsed parquet table
-  e2e     - full parse->windows->score->route pipeline
+  scan      - parquet scan of text column + JVM-side length sum (no Python)
+  arrow     - identity pandas UDF (text in, length out): Arrow + worker RT
+  parse     - the real parse UDF, result counted (no downstream)
+  parseids  - the id-only parse UDF, result counted
+  winscore2 - windows + scorer (full carry) from a pre-parsed parquet table
+  winscore3 - windows + scorer with carry=() (the flagship shape)
+  winscoreZ - winscore2's Python work with a 1-row-per-host output
+  grouparrow, shufonly, scanparsed - host-shuffle / Arrow / scan
+              isolation stages over the pre-parsed table
+  cpuburn   - corpus-free pure-CPU control
+  e2e2      - full parse->windows->score->route pipeline
 
 Usage: python scripts/stage_probe.py STAGE N_ROWS [RUNS]
 Prints one JSON line; cores from SPARK_GRAFT_CPUS.
@@ -51,7 +57,7 @@ def main():
         pages = spark.read.parquet(pages_path)
 
     parsed_path = (pages_path or "") + "_parsed"
-    if stage in ("winscore", "winscore2", "winscore3", "winscore3s", "winscoreZ", "grouparrow", "shufonly", "scanparsed") and not os.path.exists(parsed_path + "/_SUCCESS"):
+    if stage in ("winscore2", "winscore3", "winscoreZ", "grouparrow", "shufonly", "scanparsed") and not os.path.exists(parsed_path + "/_SUCCESS"):
         parse_op.parse_pages(pages, cat).write.mode("overwrite").parquet(parsed_path)
 
     def job():
@@ -69,29 +75,18 @@ def main():
         elif stage == "parse":
             parsed = parse_op.parse_pages(pages, cat)
             parsed.select(F.count("template_id")).collect()
-        elif stage == "winscore":
-            parsed = spark.read.parquet(parsed_path)
-            samples = win_op.window_samples(parse_op.matched(parsed))
-            scored = win_op.score_windows(samples, len(cat))
-            scored.select(F.sum(F.col("anomaly_score"))).collect()
         elif stage == "winscore2":
             parsed = spark.read.parquet(parsed_path)
-            scored = win_op.window_score_grouped(parse_op.matched(parsed), len(cat))
+            scored = win_op.window_score_grouped(parse_op.matched(parsed),
+                                                 len(cat), host_lookup=parsed)
             scored.select(F.sum(F.col("anomaly_score"))).collect()
         elif stage == "winscore3":
-            # round-3 production shape: carry=() AND compact shuffle —
-            # int host key through the exchange, string restored via
-            # broadcast after scoring (r2 verdict item 1)
+            # production shape: carry=() — int host key through the
+            # exchange, string restored via broadcast after scoring
             parsed = spark.read.parquet(parsed_path)
             scored = win_op.window_score_grouped(parse_op.matched(parsed),
                                                  len(cat), carry=(),
                                                  host_lookup=parsed)
-            scored.select(F.sum(F.col("anomaly_score"))).collect()
-        elif stage == "winscore3s":
-            # round-2 shape kept for A/B: carry=(), STRING host key
-            parsed = spark.read.parquet(parsed_path)
-            scored = win_op.window_score_grouped(parse_op.matched(parsed),
-                                                 len(cat), carry=())
             scored.select(F.sum(F.col("anomaly_score"))).collect()
         elif stage == "cpuburn":
             # pure-CPU control: numpy work with negligible memory traffic;
@@ -172,13 +167,8 @@ def main():
              .select(F.sum("s")).collect())
         elif stage == "e2e2":
             parsed = parse_op.parse_pages(pages, cat)
-            scored = win_op.window_score_grouped(parse_op.matched(parsed), len(cat))
-            routed = route_op.with_severity(scored)
-            route_op.sink_counts(routed).collect()
-        elif stage == "e2e":
-            parsed = parse_op.parse_pages(pages, cat)
-            samples = win_op.window_samples(parse_op.matched(parsed))
-            scored = win_op.score_windows(samples, len(cat))
+            scored = win_op.window_score_grouped(parse_op.matched(parsed),
+                                                 len(cat), host_lookup=pages)
             routed = route_op.with_severity(scored)
             route_op.sink_counts(routed).collect()
         else:

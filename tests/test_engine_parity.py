@@ -85,11 +85,12 @@ def test_pruned_carry_equals_full_sink_counts(spark, workspace):
     nc = len(cat)
     full = route_op.sink_counts(route_op.with_severity(
         win_op.window_score_grouped(
-            parse_op.matched(parse_op.parse_pages(pages, cat)), nc))).collect()
+            parse_op.matched(parse_op.parse_pages(pages, cat)), nc,
+            host_lookup=pages))).collect()
     pruned = route_op.sink_counts(route_op.with_severity(
         win_op.window_score_grouped(
             parse_op.matched(parse_op.parse_template_ids(pages, cat)), nc,
-            carry=()))).collect()
+            host_lookup=pages, carry=()))).collect()
     assert [r.asDict() for r in full] == [r.asDict() for r in pruned]
 
 
@@ -238,65 +239,6 @@ def test_fit_partition_invariance(spark, pages_df, oracle_result):
     assert list(cat1["template"]) == list(cat8["template"])
     assert list(cat1["freq"]) == list(cat8["freq"])
     assert list(cat1["template"]) == list(oracle_result.catalog["template"])
-
-
-def test_fused_window_score_equals_two_step(spark, workspace, oracle_result):
-    """window_score_grouped (fused applyInPandas) must produce the exact
-    row set of the round-1 two-step window_samples -> score_windows."""
-    import pandas as pd
-
-    from ai_log_analyzer_spark.operators import parse as parse_op
-    from ai_log_analyzer_spark.operators import windows as win_op
-
-    parsed = spark.read.parquet(workspace["result"]["parsed_path"])
-    ncls = workspace["result"]["num_classes"]
-    two = win_op.score_windows(
-        win_op.window_samples(parse_op.matched(parsed)), ncls).toPandas()
-    fused = win_op.window_score_grouped(
-        parse_op.matched(parsed), ncls).toPandas()
-    assert len(two) == len(fused)
-    cols = ["host", "seq_no", "url", "warc_ts", "template_id", "label_id",
-            "is_anomaly"]
-    t = two.sort_values(["host", "seq_no"]).reset_index(drop=True)
-    f = fused.sort_values(["host", "seq_no"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(t[cols], f[cols], check_exact=True)
-    # scores: the two-step path batches score() across hosts (GEMM
-    # blocking depends on batch shape), the fused path scores per host
-    # exactly like the oracle — equal to float32 resolution, not bitwise
-    import numpy as np
-    np.testing.assert_allclose(t["anomaly_score"], f["anomaly_score"],
-                               rtol=2e-6, atol=0)
-
-
-def test_compact_shuffle_equals_string_path(spark, workspace):
-    """r2 verdict item 1: the compact-shuffle path (int host key through
-    the exchange + broadcast restore) must be BIT-IDENTICAL to the
-    string-key path — same per-host slices feed the same kernel, so even
-    the float64 scores match exactly."""
-    import pandas as pd
-
-    from ai_log_analyzer_spark.operators import parse as parse_op
-    from ai_log_analyzer_spark.operators import windows as win_op
-
-    parsed = spark.read.parquet(workspace["result"]["parsed_path"])
-    ncls = workspace["result"]["num_classes"]
-    base = win_op.window_score_grouped(
-        parse_op.matched(parsed), ncls).toPandas()
-    compact = win_op.window_score_grouped(
-        parse_op.matched(parsed), ncls, host_lookup=parsed).toPandas()
-    assert list(base.columns) == list(compact.columns)
-    b = base.sort_values(["host", "seq_no"]).reset_index(drop=True)
-    c = compact.sort_values(["host", "seq_no"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(b, c, check_exact=True)
-    # and with carry=() — the flagship shape
-    base0 = win_op.window_score_grouped(
-        parse_op.matched(parsed), ncls, carry=()).toPandas()
-    comp0 = win_op.window_score_grouped(
-        parse_op.matched(parsed), ncls, carry=(),
-        host_lookup=parsed).toPandas()
-    b0 = base0.sort_values(["host", "seq_no"]).reset_index(drop=True)
-    c0 = comp0.sort_values(["host", "seq_no"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(b0, c0, check_exact=True)
 
 
 def test_compact_shuffle_host_restore_shuffle_join_fallback(spark, workspace):

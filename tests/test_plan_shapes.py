@@ -76,6 +76,58 @@ def test_sink_counts_is_partial_agg(spark, pages_path, catalog_rows):
     assert "partial" in plan.lower()  # map-side combine before the exchange
 
 
+def _nodes(plan):
+    """Pre-order walk of a JVM physical plan (AQE root unwrapped)."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _nodes(kids.apply(i))
+
+
+def _output(node) -> list:
+    out = node.output()
+    return [(out.apply(i).name(), out.apply(i).dataType().simpleString())
+            for i in range(out.size())]
+
+
+@pytest.mark.parametrize("series_parts", [None, 32])
+def test_window_score_one_int_key_exchange(spark, pages_path, catalog_rows,
+                                           series_parts):
+    """The windows stage shuffles ONCE, on the int host key: exactly one
+    hashpartitioning Exchange feeds FlatMapGroupsInPandas (series_parts
+    widens that exchange rather than adding one), no Exchange outside
+    the host dictionary carries the host string, and the string is
+    restored by a BroadcastHashJoin."""
+    from ai_log_analyzer_spark.operators import parse as parse_op
+    from ai_log_analyzer_spark.operators import windows as win_op
+    pages = spark.read.parquet(pages_path)
+    scored = win_op.window_score_grouped(
+        parse_op.matched(parse_op.parse_template_ids(pages, catalog_rows)),
+        len(catalog_rows), host_lookup=pages, carry=(),
+        series_parts=series_parts)
+    nodes = list(_nodes(scored._jdf.queryExecution().executedPlan()))
+    [fmg] = [n for n in nodes if n.nodeName() == "FlatMapGroupsInPandas"]
+    feeding = [n for n in _nodes(fmg) if n.nodeName() == "Exchange"]
+    assert len(feeding) == 1, [n.toString() for n in feeding]
+    assert "hashpartitioning(_b" in feeding[0].toString()
+    assert all(name != "host" and typ != "string"
+               for name, typ in _output(feeding[0])), _output(feeding[0])
+
+    [bhj] = [n for n in nodes if n.nodeName() == "BroadcastHashJoin"]
+    assert any(n.nodeName() == "FlatMapGroupsInPandas"
+               for n in _nodes(bhj.children().apply(0)))
+    [bx] = [n for n in nodes if n.nodeName() == "BroadcastExchange"]
+
+    def host_exchanges(tree):
+        return [n for n in tree if n.nodeName() == "Exchange"
+                and ("host", "string") in _output(n)]
+    # only the distinct-host dictionary (beneath the broadcast) shuffles
+    # host strings
+    assert len(host_exchanges(nodes)) == len(host_exchanges(_nodes(bx)))
+
+
 def test_round5_projection_ops_zero_shuffle_zero_python(spark):
     """script_stats, extract_links, and the html_outlinks explode are
     pure projections: no Exchange, no Python eval node anywhere."""

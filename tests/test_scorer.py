@@ -118,3 +118,95 @@ def test_score_chunking_identity():
             scorer.SCORE_CHUNK = old
         np.testing.assert_array_equal(e1, e2)
         np.testing.assert_array_equal(a1, a2)
+
+
+def _rowwise_score(window_ids, label_ids, num_classes):
+    """Stand-in scorer whose row i depends only on window i and label i
+    (the real GEMMs vary in the low bits with batch shape), so split and
+    whole scoring can be compared bitwise on the window/label rule."""
+    weights = np.arange(1, window_ids.shape[1] + 1, dtype=np.float64)
+    err = window_ids.astype(np.float64) @ weights + label_ids / 1024.0
+    anom = (window_ids == label_ids[:, None]).any(axis=1)
+    return err, anom
+
+
+def _split_score(ids, split, num_classes):
+    """Score ``ids`` as two micro-batches split at ``split``, the way
+    ``score_stream_stateful`` does: the second call sees the stored
+    tail of w+lead-1 ids plus the new rows.  Returns concatenated
+    (ends, labels, err, anom) with ends as positions in ``ids``, or None
+    when neither call has a window end."""
+    from ai_log_analyzer_spark.operators.windows import score_series
+    w, lead = scorer.WINDOW_SIZE, scorer.LABEL_LEAD
+    offset = split - min(split, w + lead - 1)
+    first = score_series(ids[:split], num_classes, w, lead, first_end=w - 1)
+    second = score_series(ids[offset:], num_classes, w, lead,
+                          first_end=max(w - 1, split - lead) - offset)
+    parts = [first] if first is not None else []
+    if second is not None:
+        ends, *rest = second
+        parts.append((ends + offset, *rest))
+    return tuple(map(np.concatenate, zip(*parts))) if parts else None
+
+
+def _oracle_frame(ids):
+    import pandas as pd
+    n = len(ids)
+    return pd.DataFrame({"host": "h", "seq_no": np.arange(n),
+                         "url": [f"u{i}" for i in range(n)],
+                         "warc_ts": pd.Timestamp("2024-01-01"),
+                         "template_id": ids})
+
+
+# window counts n - w - lead + 1 on both sides of SCORE_CHUNK (1024)
+_KERNEL_LENGTHS = (5, 12, 13, 40, 1035, 1036, 2500)
+
+
+def test_series_kernel_split_equals_whole_equals_oracle(monkeypatch):
+    """Batch↔stream parity at the kernel: for every 2-way split, the
+    stream's two ``score_series`` calls (tail offset) produce exactly
+    the window ends, labels and per-row outputs of one whole-series
+    call, and those equal the oracle's independent window loop — all
+    bitwise, with a row-wise scorer so only the window rule is tested."""
+    from ai_log_analyzer_spark.operators.windows import score_series
+    from ai_log_analyzer_spark.oracle import pipeline as O
+    monkeypatch.setattr(scorer, "score", _rowwise_score)
+    w, lead, c = scorer.WINDOW_SIZE, scorer.LABEL_LEAD, 50
+    rng = np.random.default_rng(11)
+    for n in _KERNEL_LENGTHS:
+        ids = rng.integers(0, c, size=n).astype(np.int64)
+        whole = score_series(ids, c, w, lead, first_end=w - 1)
+        if whole is None:
+            assert n < w + lead
+            assert all(_split_score(ids, k, c) is None for k in range(1, n))
+            continue
+        diverging = [k for k in range(1, n) if not all(
+            map(np.array_equal, _split_score(ids, k, c), whole))]
+        assert diverging == [], f"n={n}: splits {diverging[:5]} diverge"
+        ref = O.window_score(_oracle_frame(ids), c)
+        np.testing.assert_array_equal(ids[whole[0]], ref["template_id"])
+        np.testing.assert_array_equal(whole[1], ref["label_id"])
+        np.testing.assert_array_equal(whole[2], ref["anomaly_score"])
+        np.testing.assert_array_equal(whole[3], ref["is_anomaly"])
+
+
+def test_series_kernel_real_scorer_matches_oracle():
+    """With the real scorer the whole-series kernel is bitwise equal to
+    the oracle on both the dense and the sparse (> SCORE_CHUNK) path,
+    and a 2-way split keeps every decision (scores within the f32 GEMM
+    band the stream parity test allows)."""
+    from ai_log_analyzer_spark.operators.windows import score_series
+    from ai_log_analyzer_spark.oracle import pipeline as O
+    w, lead, c = scorer.WINDOW_SIZE, scorer.LABEL_LEAD, 50
+    rng = np.random.default_rng(12)
+    for n in (40, 1035, 1036):
+        ids = rng.integers(0, c, size=n).astype(np.int64)
+        ends, labels, err, anom = score_series(ids, c, w, lead, first_end=w - 1)
+        ref = O.window_score(_oracle_frame(ids), c)
+        np.testing.assert_array_equal(err, ref["anomaly_score"])
+        np.testing.assert_array_equal(anom, ref["is_anomaly"])
+        for split in (1, w + lead - 1, n // 2, n - 1):
+            s_ends, _, s_err, s_anom = _split_score(ids, split, c)
+            np.testing.assert_array_equal(s_ends, ends)
+            np.testing.assert_array_equal(s_anom, anom)
+            np.testing.assert_allclose(s_err, err, rtol=1e-5, atol=1e-7)

@@ -46,15 +46,24 @@ def _batch_expected(spark, path, cat):
     pages = spark.read.option("recursiveFileLookup", "true").parquet(path)
     parsed = parse_op.parse_template_ids(pages, cat)
     return (win_op.window_score_grouped(parse_op.matched(parsed), len(cat),
-                                        carry=())
+                                        host_lookup=pages, carry=())
             .toPandas().sort_values(["host", "seq_no"])
             .reset_index(drop=True))
 
 
-def test_stateful_stream_scores_match_batch(spark, split_corpus):
+def _drain_to_parquet(spark, path, cat, tmp_path):
+    """Run the stateful scorer over ``path`` one file per micro-batch
+    into a fresh parquet sink and read the sink back."""
+    out = str(tmp_path / "scored_out")
+    SP.run_stateful_scores_to_parquet(spark, path, cat, len(cat), out,
+                                      str(tmp_path / "ckpt"),
+                                      max_files_per_trigger=1)
+    return spark.read.parquet(out)
+
+
+def test_stateful_stream_scores_match_batch(spark, split_corpus, tmp_path):
     path, cat = split_corpus
-    got = (SP.run_stateful_scores_available_now(
-               spark, path, cat, len(cat), max_files_per_trigger=1)
+    got = (_drain_to_parquet(spark, path, cat, tmp_path)
            .toPandas().sort_values(["host", "seq_no"]).reset_index(drop=True))
     exp = _batch_expected(spark, path, cat)
     assert len(got) == len(exp) and len(got) > 0
@@ -64,7 +73,8 @@ def test_stateful_stream_scores_match_batch(spark, split_corpus):
                                rtol=1e-5, atol=1e-7)
 
 
-def test_stateful_stream_multiple_batches_ran(spark, split_corpus):
+def test_stateful_stream_multiple_batches_ran(spark, split_corpus,
+                                              tmp_path):
     """Sanity: the parity above must actually exercise cross-batch
     state — with 4 files and maxFilesPerTrigger=1 the expected sample
     count per host (n_host − w − 1) only comes out right if tails carry
@@ -76,8 +86,7 @@ def test_stateful_stream_multiple_batches_ran(spark, split_corpus):
     import ai_log_analyzer_spark.scorer as SC
     expected_total = sum(max(0, int(c) - SC.WINDOW_SIZE - SC.LABEL_LEAD + 1)
                          for c in per_host)
-    got = SP.run_stateful_scores_available_now(
-        spark, path, cat, len(cat), max_files_per_trigger=1)
+    got = _drain_to_parquet(spark, path, cat, tmp_path)
     assert got.count() == expected_total
 
 
@@ -112,3 +121,25 @@ def test_stateful_parquet_sink_checkpoint_restart(spark, split_corpus,
         assert got[c].tolist() == exp[c].tolist(), f"column {c} diverges"
     np.testing.assert_allclose(got["anomaly_score"], exp["anomaly_score"],
                                rtol=1e-5, atol=1e-7)
+
+
+def test_stateful_stream_out_of_order_batch_raises(spark, split_corpus,
+                                                   tmp_path):
+    """A micro-batch whose host rows sit at or below the stored tail's
+    seq_no (here chunk1 lands before chunk0, e.g. a late backfill file)
+    must raise, naming the host and both seq_no values, instead of
+    scoring windows that splice old and new rows."""
+    import os
+    import shutil
+
+    path, cat = split_corpus
+    src = tmp_path / "incoming"
+    src.mkdir()
+    for i, mtime in ((1, 1_000_000_000), (0, 1_000_000_100)):
+        shutil.copytree(f"{path}/chunk{i}", src / f"chunk{i}")
+        for f in os.listdir(src / f"chunk{i}"):
+            os.utime(src / f"chunk{i}" / f, (mtime, mtime))
+    with pytest.raises(Exception,
+                       match=r"host '[^']+' received seq_no \d+ at or below "
+                             r"its last seen seq_no \d+"):
+        _drain_to_parquet(spark, str(src), cat, tmp_path)
