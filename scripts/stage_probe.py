@@ -12,6 +12,8 @@ caller.  Stages:
   grouparrow, shufonly, scanparsed - host-shuffle / Arrow / scan
               isolation stages over the pre-parsed table
   cpuburn   - corpus-free pure-CPU control
+  pytask    - corpus-free fixed Python cost per task: cores * 8 one-row
+              identity mapInPandas tasks; also prints wall * cores / tasks
   e2e2      - full parse->windows->score->route pipeline
 
 Usage: python scripts/stage_probe.py STAGE N_ROWS [RUNS]
@@ -45,7 +47,7 @@ def main():
     spark = build_session(app=f"probe-{stage}", cores=cores)
     sys.path.insert(0, REPO)
     import bench
-    if stage == "cpuburn":     # corpus-free control stage
+    if stage in ("cpuburn", "pytask"):     # corpus-free control stages
         pages_path = cat = pages = None
     else:
         pages_path = bench.ensure_pages(spark, n_rows)
@@ -59,6 +61,8 @@ def main():
     parsed_path = (pages_path or "") + "_parsed"
     if stage in ("winscore2", "winscore3", "winscoreZ", "grouparrow", "shufonly", "scanparsed") and not os.path.exists(parsed_path + "/_SUCCESS"):
         parse_op.parse_pages(pages, cat).write.mode("overwrite").parquet(parsed_path)
+
+    py_tasks = cores * 8
 
     def job():
         if stage == "scan":
@@ -108,6 +112,14 @@ def main():
             (spark.range(n_rows // 2000).repartition(n_tasks)
              .mapInPandas(_burn, schema="s double")
              .agg(F.sum("s")).collect())
+        elif stage == "pytask":
+            def _ident(batches):
+                # import the package, as every engine UDF's closure does
+                import ai_log_analyzer_spark  # noqa: F401
+                yield from batches
+            (spark.range(py_tasks, numPartitions=py_tasks)
+             .mapInPandas(_ident, schema="id long")
+             .agg(F.count("id")).collect())
         elif stage == "parseids":
             # round-2 production shape: id-only parse (no extraction,
             # 8 bytes/row out of Python)
@@ -177,9 +189,11 @@ def main():
     job()  # warmup (worker cold start, codegen)
     best = min((lambda t0: (job(), time.time() - t0)[1])(time.time())
                for _ in range(runs))
-    print(json.dumps({"stage": stage, "cores": cores, "rows": n_rows,
-                      "wall_s": round(best, 3),
-                      "rows_per_s": round(n_rows / best, 1)}))
+    out = {"stage": stage, "cores": cores, "rows": n_rows,
+           "wall_s": round(best, 3), "rows_per_s": round(n_rows / best, 1)}
+    if stage == "pytask":
+        out.update(tasks=py_tasks, s_per_task=round(best * cores / py_tasks, 3))
+    print(json.dumps(out))
     spark.stop()
 
 
