@@ -3,7 +3,7 @@
 The catalog is the engine's D2/D13 (SURVEY.md §1): the deterministic,
 immutable output of the fit phase, broadcast to executors for matching.
 ``Matcher.match_frame`` is the ONE matching implementation — the
-single-node oracle and the Spark ``mapInPandas`` parse stage both call
+single-node oracle and the Spark Arrow parse UDFs both call
 it, so per-row disagreement between them is impossible by construction;
 parity tests then exercise the *distributed* concerns (partitioning,
 fit-merge, shuffles).
@@ -40,42 +40,17 @@ class CatalogEntry:
     mask_names: List[str]
     example: str
     freq: int
-    # compiled lazily: eager compilation of 2 regexes × catalog
-    # cardinality cost ~5.7 s at 5k templates (measured, r4) and ran
-    # TWICE per job (freeze on the driver, from_rows per worker); the
-    # matcher's candidate pruning touches only a handful of entries per
-    # distinct masked form, so lazy compile does O(forms) work instead
-    # of O(catalog).  r6: match_pattern (the selection regex SOURCE) is
-    # itself lazy — the Matcher's dict/token-compare path never touches
-    # it, and building 10⁴ escaped regex sources per worker was ~half of
-    # from_rows' wall; only the ≤200-template JVM parse path renders it.
-    _match_re: Optional[re.Pattern] = None
+    # compiled lazily: eager compilation × catalog cardinality cost
+    # seconds at 5k templates (measured, r4) and ran TWICE per job
+    # (freeze on the driver, from_rows per worker); the Matcher
+    # extracts params by token slices and never compiles it.
     _extract_re: Optional[re.Pattern] = None
-    _match_pattern: Optional[str] = None
-
-    @property
-    def match_pattern(self) -> str:
-        if self._match_pattern is None:
-            self._match_pattern = _match_regex(self.tokens)
-        return self._match_pattern
-
-    @property
-    def match_re(self) -> re.Pattern:
-        if self._match_re is None:
-            self._match_re = re.compile(self.match_pattern)
-        return self._match_re
 
     @property
     def extract_re(self) -> re.Pattern:
         if self._extract_re is None:
             self._extract_re = re.compile(self.extract_pattern)
         return self._extract_re
-
-
-def _match_regex(tokens: List[str]) -> str:
-    """Regex over the *masked* line equivalent to exact token match."""
-    parts = [r"\S+" if t == masking.WILDCARD else re.escape(t) for t in tokens]
-    return "^" + r"\s+".join(parts) + "$"
 
 
 def freeze(tree: Drain) -> List[CatalogEntry]:
@@ -125,7 +100,7 @@ def from_rows(df: pd.DataFrame) -> List[CatalogEntry]:
     return entries
 
 
-_RE_WS = re.compile(r"\s+")   # unicode \s — the match_pattern dialect
+_RE_WS = re.compile(r"\s+")   # unicode \s — the anchored-regex dialect
 
 
 class Matcher:
@@ -136,24 +111,17 @@ class Matcher:
 
     def __init__(self, entries: List[CatalogEntry]):
         self.entries = entries
-        self.by_count: dict[int, List[CatalogEntry]] = {}
-        for e in entries:
-            self.by_count.setdefault(e.token_count, []).append(e)
-        for lst in self.by_count.values():
-            # specificity order: fewest param slots first, then id
-            lst.sort(key=lambda e: (e.n_params, e.template_id))
         # r6 OPTIMIZATION (decision rule UNCHANGED, regexes GONE): the
-        # match_pattern regex is structurally per-token — escaped
-        # literals joined by \s+, whole-token <*> as \S+ — so matching
-        # reduces to a positional token compare over the \s+-split form
-        # (wildcard = any non-empty token; no leading/trailing \s).
-        # Templates with no whole-token wildcard (the overwhelming
-        # majority) resolve via ONE dict probe on the token tuple;
-        # wildcard-bearing templates fall back to the ordered compare.
-        # The old path lazily re.compile()d ~the whole catalog on first
-        # touch (~0.6 ms/template — 30 s of pure regex compilation per
-        # worker at a 50k-template catalog); equality is pinned by
-        # tests/test_parse_jvm.py + engine parity + the rewrite suite.
+        # rule is an anchored per-token regex over the masked form —
+        # escaped literals joined by \s+, whole-token <*> as \S+ — so
+        # matching reduces to a positional token compare over the
+        # \s+-split form (wildcard = any non-empty token; no leading/
+        # trailing \s).  Templates with no whole-token wildcard (the
+        # overwhelming majority) resolve via ONE dict probe on the token
+        # tuple; wildcard-bearing templates fall back to the ordered
+        # compare.  Compiling per-template regexes instead costs ~0.6 ms
+        # per template (30 s per worker at a 50k-template catalog);
+        # equality is pinned by tests/test_parse.py + engine parity.
         self._lit_map: dict[tuple, CatalogEntry] = {}
         self._wild_by_count: dict[int, List[CatalogEntry]] = {}
         for e in entries:

@@ -448,8 +448,13 @@ def semdedup(emb: DataFrame, centroids: list[list[float]],
             with np.errstate(invalid="ignore", divide="ignore"):
                 cs = dot / (nrm[:, None] * cent_norm[None, :])
             cell = np.argmax(cs, axis=1).astype(np.int32)
-            top2 = -np.partition(-cs, 1, axis=1)[:, :2]
-            for r in np.flatnonzero(~(top2[:, 0] - top2[:, 1] > 2e-9)):
+            # one centroid: every row is cell 0 and there is no top-2
+            # tie band (np.partition's kth=1 would be out of bounds)
+            ties = ()
+            if n_cents > 1:
+                top2 = -np.partition(-cs, 1, axis=1)[:, :2]
+                ties = np.flatnonzero(~(top2[:, 0] - top2[:, 1] > 2e-9))
+            for r in ties:
                 if not np.all(np.isfinite(cs[r])):
                     # NaN/inf rows (zero-norm vectors): np.argmax picks
                     # the first NaN / the largest value, matching

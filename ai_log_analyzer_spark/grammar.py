@@ -17,7 +17,6 @@ to the oracle parser.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 from typing import List
 
@@ -83,19 +82,6 @@ TEMPLATES: List[str] = [
 
 ZIPF_A = 1.3
 BASE_TS = datetime(2024, 1, 1, tzinfo=timezone.utc)
-
-
-@dataclass
-class PageRow:
-    url: str
-    warc_ts: datetime
-    html: bytes
-    text: str
-    lang: str
-    true_template: int
-    true_params: List[str]
-    host: str
-    seq_no: int
 
 
 def _zipf_probs(n: int, a: float = ZIPF_A) -> np.ndarray:
@@ -165,23 +151,6 @@ def generate_pages(n_rows: int, seed: int = SEED) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=[
         "url", "warc_ts", "html", "text", "lang", "host", "seq_no",
         "true_template", "true_params"])
-
-
-def generate_pages_arrow_batches(n_rows: int, seed: int = SEED,
-                                 batch: int = 100_000):
-    """Iterator of pandas chunks for large generations (bench scale) —
-    avoids materializing the whole table in one pandas frame."""
-    done = 0
-    part = 0
-    while done < n_rows:
-        take = min(batch, n_rows - done)
-        # distinct seed per chunk keeps chunks independent AND deterministic
-        df = generate_pages(take, seed=seed + 7919 * part)
-        df["url"] = df["url"].str.replace("/p/", f"/p{part}_", regex=False)
-        df["seq_no"] = df["seq_no"] + part * batch
-        yield df
-        done += take
-        part += 1
 
 
 def render_rows(ids: np.ndarray, seed: int = SEED,

@@ -53,8 +53,6 @@ _COMBINED = re.compile("|".join(f"(?P<{n}>{p})" for n, p in MASK_INSTRUCTIONS),
 def _mask_repl(m: re.Match) -> str:
     return MASK_PREFIX + m.lastgroup + MASK_SUFFIX
 
-# A masked token or a wildcard, for template introspection.
-MASK_TOKEN_RE = re.compile(r"^<:(\w+):>$")
 # Masks can be EMBEDDED inside a token (e.g. "{IP}:{NUM}" renders one
 # token "1.2.3.4:80" masking to "<:IP:>:<:NUM:>") — scan for occurrences.
 MASK_SCAN_RE = re.compile(r"<:(\w+):>")
@@ -86,10 +84,6 @@ def mask_series(s):
 def tokenize(line: str) -> List[str]:
     """Whitespace tokenization, collapsing runs (``str.split`` semantics)."""
     return line.split()
-
-
-def is_param_token(tok: str) -> bool:
-    return tok == WILDCARD or MASK_TOKEN_RE.match(tok) is not None
 
 
 def _token_pieces(tok: str):

@@ -16,13 +16,13 @@ Scale design:
 - the catalog is broadcast (KBs); matching is map-side only — zero
   shuffle in this stage; callers' column pruning keeps the fat ``html``
   out of the scan.
-- unmatched rows keep ``template_id = NULL`` and flow to the
-  dead-letter sink instead of crashing (reference fix, SURVEY.md §7).
+- unmatched rows keep ``template_id = NULL`` in the parsed output
+  instead of crashing (reference fix, SURVEY.md §7); ``matched`` drops
+  them before scoring.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import pandas as pd
@@ -133,97 +133,13 @@ def parse_pages(pages: DataFrame, catalog_rows: pd.DataFrame) -> DataFrame:
                     F.col("_p.extracted_text").alias("extracted_text")))
 
 
-# Catalogs at or below this cardinality take the all-JVM id-only parse
-# (one flat codegen'd CASE over the catalog); above it the generated
-# class grows past what janino can compile cheaply (a ~500-branch CASE
-# inside the flagship DAG OOMed an 8g driver heap during whole-stage
-# codegen compilation) and the Arrow path's O(1) dict-memo per distinct
-# form wins anyway.  200 comfortably covers Drain-mined *log* catalogs
-# (the reference's domain — the grammar corpus mines 40); web-text
-# catalogs (hundreds to thousands of forms) fall back to Arrow.
-# Env SPARK_GRAFT_JVM_PARSE: "0" disables the JVM path entirely, any
-# other integer overrides the cap.
-JVM_PARSE_MAX_TEMPLATES = 200
-
-
-def _jvm_masked(col) -> F.Column:
-    """Catalyst mirror of ``masking.mask_line``: one regexp_replace per
-    mask instruction, in order — the multipass form, which the masking
-    property suite pins equivalent to the single-pass alternation kernel
-    (tests/test_masking.py).  Patterns stay in the Java-regex ∩ Python-
-    re.ASCII subset (fixed-width lookarounds, ASCII classes)."""
-    from .. import masking
-    s = col
-    for name, pat in masking.MASK_INSTRUCTIONS:
-        s = F.regexp_replace(s, pat,
-                             masking.MASK_PREFIX + name + masking.MASK_SUFFIX)
-    return s
+# perfbench/worker.py reports it; drop at the next benchmark revision
+JVM_PARSE_MAX_TEMPLATES = 0
 
 
 def jvm_parse_eligible(catalog_rows: pd.DataFrame) -> bool:
-    env = os.environ.get("SPARK_GRAFT_JVM_PARSE")
-    cap = JVM_PARSE_MAX_TEMPLATES if env is None else int(env)
-    return 0 < len(catalog_rows) <= cap
-
-
-def parse_template_ids_jvm(pages: DataFrame,
-                           catalog_rows: pd.DataFrame) -> DataFrame:
-    """All-JVM id-only parse: the Matcher's decision rule compiled into
-    ONE whole-stage-codegen CASE expression — no Python workers, no
-    Arrow hop, no shuffle.
-
-    Semantics replicated exactly from ``catalog.Matcher._match_form``
-    (equality pinned per-row by tests/test_parse_jvm.py):
-    - masked form via the shared mask instructions (multipass ≡
-      single-pass per the masking property suite);
-    - candidates = same token count, first token literal-equal or
-      param-bearing, tried in (n_params, template_id) order — here one
-      CASE branch per template, ordered (token_count, n_params, id):
-      branches of other counts fail on the cheap int conjunct first,
-      wrong-first-token branches on the string equality, so each row
-      pays the same pruned handful of regex matches the Python Matcher
-      pays, minus its form memo (regexes here are cheap anchored
-      token-joins and stay in codegen);
-    - no match → NULL template_id (dead-letter), like the Arrow path.
-
-    Scale: the CASE is O(catalog) expression nodes broadcast inside the
-    plan itself; eligibility is capped (JVM_PARSE_MAX_TEMPLATES) — web-
-    scale log catalogs are hundreds of templates, and bigger catalogs
-    fall back to the Arrow path whose per-worker dict memo is
-    cardinality-proof.  The win at cluster scale: the parse stage's
-    text bytes never leave the JVM (no Arrow serialize/deserialize
-    round-trip), and the stage joins the scan in one codegen'd pass."""
-    from .. import masking
-    from ..catalog import from_rows
-
-    entries = from_rows(catalog_rows)
-    df = pages.select("url", "warc_ts", "lang", "host", "seq_no",
-                      _jvm_masked(F.col("text")).alias("_form"))
-    # full-whitespace trim (not F.trim, which strips only spaces): the
-    # Python Matcher counts via str.split(), so a trailing \n or \t must
-    # not inflate _cnt and dead-letter a row the Arrow path parses
-    form_trim = F.regexp_replace(F.col("_form"), r"^\s+|\s+$", "")
-    toks = F.split(form_trim, r"\s+")
-    df = (df
-          .withColumn("_cnt", F.when(form_trim == "", F.lit(0))
-                               .otherwise(F.size(toks)))
-          .withColumn("_tok0", F.element_at(toks, 1)))
-
-    expr = None
-    for e in sorted(entries,
-                    key=lambda e: (e.token_count, e.n_params, e.template_id)):
-        cond = F.col("_cnt") == e.token_count
-        tok0 = e.tokens[0] if e.tokens else None
-        if tok0 is not None and tok0 != masking.WILDCARD \
-                and masking.MASK_SCAN_RE.search(tok0) is None:
-            cond = cond & (F.col("_tok0") == tok0)
-        cond = cond & F.col("_form").rlike(e.match_pattern)
-        expr = (F.when(cond, F.lit(e.template_id)) if expr is None
-                else expr.when(cond, F.lit(e.template_id)))
-    tid = (expr.otherwise(F.lit(None)) if expr is not None
-           else F.lit(None)).cast("long")
-    return df.select("url", "warc_ts", "lang", "host", "seq_no",
-                     tid.alias("template_id"))
+    # perfbench/worker.py reports it; drop at the next benchmark revision
+    return False
 
 
 def parse_template_ids(pages: DataFrame, catalog_rows: pd.DataFrame) -> DataFrame:
@@ -235,18 +151,8 @@ def parse_template_ids(pages: DataFrame, catalog_rows: pd.DataFrame) -> DataFram
     bytes/doc through the memory-bandwidth-bound stages).  Use when the
     consumer prunes extracted_text (scoring, counting, routing on
     severity); sinks that persist extracted text use ``parse_pages``.
-
-    Dispatch: catalogs within JVM_PARSE_MAX_TEMPLATES take the all-JVM
-    codegen path (``parse_template_ids_jvm``); larger catalogs run the
-    Arrow-batched Matcher UDF below."""
-    if jvm_parse_eligible(catalog_rows):
-        return parse_template_ids_jvm(pages, catalog_rows)
-    return parse_template_ids_arrow(pages, catalog_rows)
-
-
-def parse_template_ids_arrow(pages: DataFrame,
-                             catalog_rows: pd.DataFrame) -> DataFrame:
-    """Arrow-batched Matcher path (the general/cardinality-proof form)."""
+    One Arrow-batched Matcher UDF for every catalog size: the worker-side
+    form memo makes its cost independent of catalog cardinality."""
     sc = pages.sparkSession.sparkContext
     token = _catalog_token(catalog_rows)
     bc = _broadcast_for(sc, token, catalog_rows)
@@ -261,16 +167,6 @@ def parse_template_ids_arrow(pages: DataFrame,
                         _match(F.col("text")).alias("template_id"))
 
 
-def dead_letter(parsed: DataFrame) -> DataFrame:
-    return parsed.filter(F.col("template_id").isNull())
-
-
 def matched(parsed: DataFrame) -> DataFrame:
     return parsed.filter(F.col("template_id").isNotNull())
 
-
-def params_from_extracted(extracted_text_col) -> F.Column:
-    """Recover the params array from the canonical encoding (derivable
-    column — never materialized in the pipeline)."""
-    from .. import masking
-    return F.split(extracted_text_col, masking.PARAM_SEP)

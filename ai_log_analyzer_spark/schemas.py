@@ -55,10 +55,3 @@ SCORED = T.StructType([
     T.StructField("anomaly_score", T.DoubleType(), False),
     T.StructField("is_anomaly", T.BooleanType(), False),
 ])
-
-LINEAGE = T.StructType([
-    T.StructField("stage", T.StringType(), False),
-    T.StructField("partition_id", T.IntegerType(), False),
-    T.StructField("rows", T.LongType(), False),
-    T.StructField("run_id", T.StringType(), False),
-])

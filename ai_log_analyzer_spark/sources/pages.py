@@ -32,10 +32,6 @@ def write_pages(df: DataFrame, path: str, n_buckets: int = N_BUCKETS):
        .write.mode("overwrite").partitionBy("bucket").parquet(path))
 
 
-def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def generate_and_write(spark: SparkSession, path: str, n_rows: int,
                        seed: int = grammar.SEED, n_buckets: int = N_BUCKETS,
                        n_hosts: int | None = None):

@@ -804,6 +804,22 @@ def test_semdedup_assignment_is_projection(spark):
     assert "Python" not in plan
 
 
+def test_semdedup_one_centroid_is_one_cell(spark):
+    """One centroid: every row lands in cell 0 (no top-2 tie band to
+    resolve) and the min-id keep rule still runs over that one cell."""
+    from ai_log_analyzer_spark.functions import similarity as S
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 0.001]),
+         (3, [0.0, 2.0]), (4, [0.0, 0.0])],
+        "vec_id long, emb array<double>")
+    out = {r.vec_id: r for r in
+           S.semdedup(emb, [[1.0, 1.0]], vec_col="emb").collect()}
+    assert sorted(out) == [0, 1, 2, 3, 4]
+    assert {r.cell for r in out.values()} == {0}
+    assert {v: r.keep for v, r in out.items()} == {0: 1, 1: 1, 2: 0,
+                                                   3: 0, 4: 1}
+
+
 def test_bloom_gate_is_superset_of_exact_contamination(spark):
     from ai_log_analyzer_spark.functions import dedup as D2
     import pandas as pd
