@@ -1,7 +1,8 @@
 """SparkSession factory with the tuned configuration in ONE place
 (SURVEY.md §4.3): AQE on, skew-join on, Arrow on, shuffle partitions
-sized to local cores. At cluster scale the same confs apply; only
-master/memory change via spark-submit."""
+= cores, so every reduce stage -- and the stateful stream's state
+store -- runs one task per core. At cluster scale the same confs
+apply; only master/memory change via spark-submit."""
 
 from __future__ import annotations
 
@@ -21,9 +22,15 @@ def build_session(app: str = "ai-log-analyzer-spark",
         os.environ.setdefault(var, "1")
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # one reduce task per core: each task of a Python-UDF reduce stage
+    # pays a worker round trip, and each stateful-stream task a state-
+    # store load/commit, so extra waves are pure fixed cost (SCALING.md,
+    # "shuffle partitions = cores").  Pass shuffle_partitions= (or
+    # --conf on spark-submit) for skewed few-series batches, where
+    # several waves let the scheduler balance load.  A stream checkpoint
+    # keeps the count it was created with.
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get(
-            "SPARK_GRAFT_SHUFFLE_PARTITIONS") or max(cores, 8))
+        shuffle_partitions = cores
     b = (
         SparkSession.builder
         .master(f"local[{cores}]")

@@ -299,27 +299,30 @@ def hits(edges: DataFrame, iters: int = 3) -> DataFrame:
 
 def hits_sql(edges_cte: str, iters: int = 3) -> str:
     """DuckDB oracle: the same integer update rule unrolled, HUGEINT
-    lane for the scale multiply."""
-    sql = [f"edges AS ({edges_cte})",
-           "nodes AS (SELECT DISTINCT node FROM "
+    lane for the scale multiply.  Every CTE is MATERIALIZED: each
+    iteration reads the previous one's CTEs twice (join + max), and
+    DuckDB inlines an unmarked CTE at every reference, so the plan
+    would grow ~18x per iteration."""
+    sql = [f"edges AS MATERIALIZED ({edges_cte})",
+           "nodes AS MATERIALIZED (SELECT DISTINCT node FROM "
            "(SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges))",
-           f"h0 AS (SELECT node, {PPM}::BIGINT AS hub FROM nodes)"]
+           f"h0 AS MATERIALIZED (SELECT node, {PPM}::BIGINT AS hub FROM nodes)"]
     for i in range(iters):
-        sql.append(f"""ar{i + 1} AS (
+        sql.append(f"""ar{i + 1} AS MATERIALIZED (
   SELECT n.node, COALESCE(s.s, 0)::BIGINT AS s FROM nodes n LEFT JOIN (
     SELECT e.dst AS node, sum(h.hub) AS s
     FROM edges e JOIN h{i} h ON h.node = e.src GROUP BY e.dst) s
   ON s.node = n.node),
-a{i + 1} AS (
+a{i + 1} AS MATERIALIZED (
   SELECT node, ((s::HUGEINT * {PPM}) //
                 greatest((SELECT max(s) FROM ar{i + 1}), 1))::BIGINT AS auth
   FROM ar{i + 1}),
-hr{i + 1} AS (
+hr{i + 1} AS MATERIALIZED (
   SELECT n.node, COALESCE(s.s, 0)::BIGINT AS s FROM nodes n LEFT JOIN (
     SELECT e.src AS node, sum(a.auth) AS s
     FROM edges e JOIN a{i + 1} a ON a.node = e.dst GROUP BY e.src) s
   ON s.node = n.node),
-h{i + 1} AS (
+h{i + 1} AS MATERIALIZED (
   SELECT node, ((s::HUGEINT * {PPM}) //
                 greatest((SELECT max(s) FROM hr{i + 1}), 1))::BIGINT AS hub
   FROM hr{i + 1})""")

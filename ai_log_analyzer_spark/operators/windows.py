@@ -202,7 +202,7 @@ def window_score_grouped(matched_events: DataFrame, num_classes: int,
     # r6 (guide §2.5/§2.6): the scorer is CPU-bound per host series.
     # When the SERIES-KEY cardinality is far below the core count (the
     # flagship corpora have 5-20 hosts), the groupBy's exchange at the
-    # global shuffle-partition count (= cores locally) throws H active
+    # global shuffle-partition count (= cores, conf.py) throws H active
     # host-buckets into P=cores partitions and they collide (balls-in-
     # bins) — one task scores 2-3 hosts while cores idle (measured: the
     # whole stage waited on a 3-host straggler at 20 hosts × 32

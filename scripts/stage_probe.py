@@ -199,3 +199,5 @@ def main():
 
 if __name__ == "__main__":
     main()
+    sys.stdout.flush()
+    os._exit(0)             # the session is stopped; interpreter exit can hang after it

@@ -51,6 +51,13 @@ def _batch_expected(spark, path, cat):
             .reset_index(drop=True))
 
 
+def _assert_matches_batch(got, exp):
+    for c in ("host", "seq_no", "template_id", "label_id", "is_anomaly"):
+        assert got[c].tolist() == exp[c].tolist(), f"column {c} diverges"
+    np.testing.assert_allclose(got["anomaly_score"], exp["anomaly_score"],
+                               rtol=1e-5, atol=1e-7)
+
+
 def _drain_to_parquet(spark, path, cat, tmp_path):
     """Run the stateful scorer over ``path`` one file per micro-batch
     into a fresh parquet sink and read the sink back."""
@@ -67,10 +74,7 @@ def test_stateful_stream_scores_match_batch(spark, split_corpus, tmp_path):
            .toPandas().sort_values(["host", "seq_no"]).reset_index(drop=True))
     exp = _batch_expected(spark, path, cat)
     assert len(got) == len(exp) and len(got) > 0
-    for c in ("host", "seq_no", "template_id", "label_id", "is_anomaly"):
-        assert got[c].tolist() == exp[c].tolist(), f"column {c} diverges"
-    np.testing.assert_allclose(got["anomaly_score"], exp["anomaly_score"],
-                               rtol=1e-5, atol=1e-7)
+    _assert_matches_batch(got, exp)
 
 
 def test_stateful_stream_multiple_batches_ran(spark, split_corpus,
@@ -90,24 +94,29 @@ def test_stateful_stream_multiple_batches_ran(spark, split_corpus,
     assert got.count() == expected_total
 
 
-def test_stateful_parquet_sink_checkpoint_restart(spark, split_corpus,
-                                                  tmp_path):
-    """r3 verdict item 4: the parquet-sink wrapper must survive a
-    mid-corpus restart — drain half the files, stop, land the rest,
-    re-run with the SAME checkpoint, and the sink must hold exactly the
-    batch stage's scored row set (per-host state recovered, no window
-    dropped or double-scored at the restart boundary)."""
+def _drain_with_restart(spark, path, cat, tmp_path, first_partitions=None):
+    """Drain chunks 0-1, stop, land chunks 2-3 and re-run on the SAME
+    checkpoint.  ``first_partitions`` sets the session's shuffle-
+    partition count for the first run only.  Returns the sink's row
+    count after the first run, the sorted sink after the second, and
+    the checkpoint path."""
     import shutil
 
-    path, cat = split_corpus
     src = tmp_path / "incoming"
     out = str(tmp_path / "scored_out")
     ckpt = str(tmp_path / "ckpt")
     src.mkdir()
     for i in range(2):
         shutil.copytree(f"{path}/chunk{i}", src / f"chunk{i}")
-    SP.run_stateful_scores_to_parquet(spark, str(src), cat, len(cat),
-                                      out, ckpt, max_files_per_trigger=1)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    if first_partitions is not None:
+        spark.conf.set(key, str(first_partitions))
+    try:
+        SP.run_stateful_scores_to_parquet(spark, str(src), cat, len(cat),
+                                          out, ckpt, max_files_per_trigger=1)
+    finally:
+        spark.conf.set(key, prev)
     mid_rows = spark.read.parquet(out).count()
     for i in (2, 3):
         shutil.copytree(f"{path}/chunk{i}", src / f"chunk{i}")
@@ -115,12 +124,50 @@ def test_stateful_parquet_sink_checkpoint_restart(spark, split_corpus,
                                       out, ckpt, max_files_per_trigger=1)
     got = (spark.read.parquet(out).toPandas()
            .sort_values(["host", "seq_no"]).reset_index(drop=True))
+    return mid_rows, got, ckpt
+
+
+def test_stateful_parquet_sink_checkpoint_restart(spark, split_corpus,
+                                                  tmp_path):
+    """r3 verdict item 4: the parquet-sink wrapper must survive a
+    mid-corpus restart — drain half the files, stop, land the rest,
+    re-run with the SAME checkpoint, and the sink must hold exactly the
+    batch stage's scored row set (per-host state recovered, no window
+    dropped or double-scored at the restart boundary)."""
+    path, cat = split_corpus
+    mid_rows, got, _ = _drain_with_restart(spark, path, cat, tmp_path)
     exp = _batch_expected(spark, path, cat)
     assert mid_rows < len(got) == len(exp)   # restart actually appended
-    for c in ("host", "seq_no", "template_id", "label_id", "is_anomaly"):
-        assert got[c].tolist() == exp[c].tolist(), f"column {c} diverges"
-    np.testing.assert_allclose(got["anomaly_score"], exp["anomaly_score"],
-                               rtol=1e-5, atol=1e-7)
+    _assert_matches_batch(got, exp)
+
+
+def test_stateful_restart_keeps_checkpoint_partition_count(spark,
+                                                           split_corpus,
+                                                           tmp_path):
+    """A checkpoint created at one shuffle-partition count (3 here, like
+    a stream started under an older default) restarts under a session
+    whose default differs: Spark restores the count from the offset log,
+    so the state store keeps its 3 partitions and the sink still equals
+    the batch stage's rows."""
+    import json
+    import os
+
+    path, cat = split_corpus
+    assert spark.conf.get("spark.sql.shuffle.partitions") != "3"
+    mid_rows, got, ckpt = _drain_with_restart(spark, path, cat, tmp_path,
+                                              first_partitions=3)
+    exp = _batch_expected(spark, path, cat)
+    assert mid_rows < len(got) == len(exp)
+    _assert_matches_batch(got, exp)
+    offsets = sorted(f for f in os.listdir(f"{ckpt}/offsets")
+                     if f.isdigit())
+    assert len(offsets) == 4                 # 2 batches per run
+    for f in offsets:
+        with open(f"{ckpt}/offsets/{f}") as fh:
+            meta = json.loads(fh.read().splitlines()[1])
+        assert meta["conf"]["spark.sql.shuffle.partitions"] == "3", f
+    assert sorted(d for d in os.listdir(f"{ckpt}/state/0")
+                  if d.isdigit()) == ["0", "1", "2"]
 
 
 def test_stateful_stream_out_of_order_batch_raises(spark, split_corpus,
