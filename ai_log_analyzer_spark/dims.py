@@ -1,8 +1,10 @@
-"""Broadcast enrichment dimension tables (FIXTURES.md F4; SURVEY.md O23).
+"""Enrichment dimension tables (FIXTURES.md F4; SURVEY.md O23).
 
 Tiny, frozen, code-defined: lang family/weight, tld region/risk.  The
-template-frequency dim derives from the catalog at fit time.  All three
-are consumed via broadcast joins — never shuffled.
+template-frequency dim derives from the catalog at fit time.  The Spark
+enrich (operators/enrich.py) ships all three inside its projection as
+Catalyst literals — never joined, never shuffled; the oracle left-joins
+the same frames.
 """
 
 from __future__ import annotations

@@ -85,5 +85,7 @@ def write_catalog(spark: SparkSession, catalog_rows: pd.DataFrame, path: str):
 
 
 def read_catalog(spark: SparkSession, path: str) -> pd.DataFrame:
-    return spark.read.parquet(path).toPandas().sort_values("template_id") \
+    # declared schema: an inferred read costs one more Spark job
+    return spark.read.schema(schemas.CATALOG).parquet(path).toPandas() \
+        .sort_values("template_id") \
         .reset_index(drop=True)

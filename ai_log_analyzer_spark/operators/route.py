@@ -5,9 +5,20 @@ Python) kept in lockstep with ``scorer.severity`` — the oracle's numpy
 rule.  Fan-out is ONE write partitioned by severity (single pass over
 the data; per-severity directories are the per-sink tables), plus the
 per-sink aggregate counts the north rule's acceptance check needs.
+
+Counting contract: every routed row is one page — the END event of one
+``(host, seq_no)`` window — and url is the pages table's primary key,
+1:1 with ``(host, seq_no)`` (FIXTURES.md F1).  So a sink's distinct
+urls equal its rows.  ``sink_counts`` relies on this when url was
+pruned (``carry=()``), and ``footer_sink_counts`` relies on it to take
+both counts from the route write's parquet footers without a Spark job.
 """
 
 from __future__ import annotations
+
+import os
+from collections import Counter
+from typing import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,11 +51,24 @@ def sink_counts(routed: DataFrame) -> DataFrame:
     n_urls = distinct source pages per sink.  When the scoring branch
     ran with carry=() (url pruned before the Arrow hop), the page
     identity key (host, seq_no) stands in for url — exactly equal by
-    construction since url ↔ (host, seq_no) is 1:1 in the pages
-    contract (asserted in tests/test_engine_parity.py)."""
+    the counting contract above (asserted in tests/test_engine_parity.py)."""
     n_urls = (F.countDistinct("url") if "url" in routed.columns
               else F.countDistinct("host", "seq_no"))
     return (routed.groupBy("severity")
             .agg(F.count("*").alias("n_rows"),
                  n_urls.alias("n_urls"))
             .orderBy("severity"))
+
+
+def footer_sink_counts(file_rows: Iterable[tuple[str, int]]) -> list[dict]:
+    """``sink_counts`` records of a ``write_sinks`` output, from the
+    ``(relative path, footer num_rows)`` of each of its parquet files:
+    rows are summed per ``severity=`` directory and, by the counting
+    contract, ``n_urls = n_rows``."""
+    rows = Counter()
+    for rel, n in file_rows:
+        top = rel.split(os.sep, 1)[0]
+        if top.startswith("severity="):
+            rows[top[len("severity="):]] += n
+    return [{"severity": s, "n_rows": rows[s], "n_urls": rows[s]}
+            for s in sorted(rows) if rows[s]]

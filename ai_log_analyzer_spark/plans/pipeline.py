@@ -10,11 +10,18 @@ matching input fingerprint and whose output still exists — the parquet
 snapshot plays the role Iceberg snapshots would on a cluster
 (SURVEY.md §4.6).
 
-Lineage is one row per writing task of each stage, read on the driver
-from the parquet footers the stage's write just produced; it launches
-no Spark job.  The workdir must therefore be visible to the driver's
-file system, as it already is for the manifest, the fingerprints and
-the per-sink counts.
+Each stage launches only the Spark jobs that read or write its data:
+- every read of the input or of a stage output passes the schema
+  ``schemas`` declares for it (an inferred read costs one job); a
+  driver-side footer check keeps a pages table that lacks a contract
+  column failing instead of reading it as NULLs;
+- lineage is one row per writing task of each stage, and the route
+  stage's per-sink counts are sums per ``severity=`` directory, both
+  read on the driver from the parquet footers the stage's write just
+  produced (route.py states why the footer counts give ``n_urls``);
+- enrich is one projection with literal dims (operators/enrich.py).
+The workdir must therefore be visible to the driver's file system, as
+it already is for the manifest and the fingerprints.
 """
 
 from __future__ import annotations
@@ -32,6 +39,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
+from .. import schemas
 from ..operators import enrich as enrich_op
 from ..operators import fit as fit_op
 from ..operators import parse as parse_op
@@ -48,6 +56,28 @@ def _data_files(path: str):
             if not f.startswith(("_", ".")):
                 p = os.path.join(root, f)
                 yield os.path.relpath(p, path), p
+
+
+def _footer_rows(path: str):
+    """(relative name, footer ``num_rows``) of every parquet data file
+    under ``path``; reads only the footers, on the driver."""
+    for rel, p in _data_files(path):
+        if p.endswith(".parquet"):
+            yield rel, pq.read_metadata(p).num_rows
+
+
+def _read_pages(spark: SparkSession, path: str):
+    """The pages table read with the declared ``schemas.PAGES``.  A
+    declared read would give NULLs for a missing column, so the footer
+    of one data file must name every contract column."""
+    first = next((p for _rel, p in _data_files(path) if p.endswith(".parquet")),
+                 None)
+    if first is None:
+        raise ValueError(f"{path}: no parquet data file")
+    missing = set(schemas.PAGES.names) - set(pq.read_schema(first).names)
+    if missing:
+        raise ValueError(f"{first}: pages table lacks columns {sorted(missing)}")
+    return spark.read.schema(schemas.PAGES).parquet(path)
 
 
 def _fingerprint(path: str) -> str:
@@ -119,12 +149,11 @@ class PipelineRunner:
         (a partitioned write gives one task several files).  Only the
         footers are read, on the driver: no Spark job runs."""
         rows = Counter()
-        for _rel, p in _data_files(out_path):
-            if p.endswith(".parquet"):
-                task = _PART_TASK.match(os.path.basename(p))
-                if task is None:
-                    raise ValueError(f"{p}: not a part-NNNNN- parquet file")
-                rows[int(task.group(1))] += pq.read_metadata(p).num_rows
+        for rel, n in _footer_rows(out_path):
+            task = _PART_TASK.match(os.path.basename(rel))
+            if task is None:
+                raise ValueError(f"{out_path}/{rel}: not a part-NNNNN- parquet file")
+            rows[int(task.group(1))] += n
         parts = sorted(rows)
         table = pa.table({"stage": [stage] * len(parts), "partition_id": parts,
                           "rows": [rows[t] for t in parts],
@@ -158,7 +187,7 @@ class PipelineRunner:
     # -- stages -----------------------------------------------------------
     def run(self) -> dict:
         pages_fp = _fingerprint(self.pages_path)
-        pages = self.spark.read.parquet(self.pages_path)
+        pages = _read_pages(self.spark, self.pages_path)
 
         # fit: frozen catalog snapshot
         fitted = []
@@ -181,9 +210,9 @@ class PipelineRunner:
         parse_fp = pages_fp + ":" + _fingerprint(cat_path)
         parsed_path = self._stage("parse", parse_fp, _parse, "parsed")
 
-        # enrich: broadcast joins only
+        # enrich: one projection, literal dims
         def _enrich(out):
-            parsed = self.spark.read.parquet(parsed_path)
+            parsed = self.spark.read.schema(schemas.PARSED).parquet(parsed_path)
             enrich_op.enrich(parsed, catalog_rows) \
                 .write.mode("overwrite").parquet(out)
         enr_fp = _fingerprint(parsed_path)
@@ -191,20 +220,21 @@ class PipelineRunner:
 
         # windows + frozen scorer (shuffle #1: by host)
         def _score(out):
-            parsed = self.spark.read.parquet(parsed_path)
+            parsed = self.spark.read.schema(schemas.PARSED).parquet(parsed_path)
             win_op.window_score_grouped(parse_op.matched(parsed), num_classes,
                                         host_lookup=parsed) \
                 .write.mode("overwrite").parquet(out)
         scored_path = self._stage("score", enr_fp, _score, "scored")
 
-        # route: severity + fan-out sinks + per-sink counts (shuffle #2)
+        # route: severity + fan-out sinks; per-sink counts from footers
         def _route(out):
-            scored = self.spark.read.parquet(scored_path)
-            routed = route_op.with_severity(scored)
-            route_op.write_sinks(routed, out)
-            counts = route_op.sink_counts(self.spark.read.parquet(out))
-            counts.toPandas().to_json(os.path.join(out, SINK_COUNTS),
-                                      orient="records")
+            scored = self.spark.read.schema(schemas.SCORED).parquet(scored_path)
+            route_op.write_sinks(route_op.with_severity(scored), out)
+            counts = route_op.footer_sink_counts(_footer_rows(out))
+            tmp = os.path.join(out, "." + SINK_COUNTS)   # done_file: written last
+            with open(tmp, "w") as f:
+                json.dump(counts, f)
+            os.replace(tmp, os.path.join(out, SINK_COUNTS))
         routed_path = self._stage("route", _fingerprint(scored_path), _route,
                                   "routed", done_file=SINK_COUNTS)
 

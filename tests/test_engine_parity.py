@@ -9,6 +9,8 @@ Asserts, on the same deterministic pages corpus:
 - checkpoint resume: second run executes zero stages; a lost route
   output (or its per-sink counts) reruns route alone
 - lineage: one row per writing task, read from parquet footers
+- enrichment: every enrichment column per url equals the oracle's
+- job budget: each runner stage launches only the jobs that move data
 - property 3c: catalog invariant to input partition count
 """
 
@@ -18,9 +20,12 @@ import os
 import pandas as pd
 import pytest
 
-from ai_log_analyzer_spark import grammar
+from ai_log_analyzer_spark import grammar, schemas
+from ai_log_analyzer_spark.oracle import pipeline as oracle_pipeline
+from ai_log_analyzer_spark.operators import enrich as enrich_op
 from ai_log_analyzer_spark.operators import fit as fit_op
-from ai_log_analyzer_spark.plans.pipeline import PipelineRunner
+from ai_log_analyzer_spark.operators import route as route_op
+from ai_log_analyzer_spark.plans.pipeline import Manifest, PipelineRunner
 from ai_log_analyzer_spark.sources import pages as pages_src
 
 
@@ -228,6 +233,169 @@ def test_lineage_launches_no_spark_job(spark, workspace, tmp_path):
     assert tracker.getJobIdsForGroup("lineage-guard-control")
     assert tracker.getJobIdsForGroup("lineage-guard") == []
     assert rows == workspace["runner"].manifest.entries["parse"]["rows"]
+
+
+ENRICH_COLS = ["tld", "lang_family", "lang_weight", "tld_region", "tld_risk",
+               "freq", "freq_rank"]
+ENRICH_TYPES = [("tld", "string"), ("lang_family", "string"),
+                ("lang_weight", "double"), ("tld_region", "string"),
+                ("tld_risk", "double"), ("freq", "bigint"), ("freq_rank", "int")]
+
+
+def _enrichment(pdf: pd.DataFrame) -> dict:
+    """url -> the enrichment columns, a missing value (NULL/NaN) as None."""
+    return {r[0]: tuple(None if pd.isna(v) else v for v in r[1:])
+            for r in pdf[["url"] + ENRICH_COLS].itertuples(index=False)}
+
+
+def _assert_enrich_matches_oracle(spark, parsed_pdf, catalog_rows):
+    """Enrich ``parsed_pdf`` (PARSED rows) in Spark and in the oracle and
+    compare every enrichment column per url."""
+    got = enrich_op.enrich(spark.createDataFrame(parsed_pdf, schemas.PARSED),
+                           catalog_rows)
+    exp = oracle_pipeline.enrich(parsed_pdf, catalog_rows, parsed_pdf[["url"]])
+    assert [d for d in got.dtypes if d[0] in ENRICH_COLS] == ENRICH_TYPES
+    assert _enrichment(got.toPandas()) == _enrichment(exp)
+
+
+def test_enriched_matches_oracle(spark, workspace, oracle_result):
+    """The runner's ``enriched`` table carries, per url, the oracle's
+    enrichment columns with unchanged names and types."""
+    got = spark.read.parquet(workspace["result"]["enriched_path"])
+    assert [d for d in got.dtypes if d[0] in ENRICH_COLS] == ENRICH_TYPES
+    exp = _enrichment(oracle_result.enriched)
+    assert _enrichment(got.toPandas()) == exp
+    assert len(exp) == len(oracle_result.parsed)
+
+
+def _parsed_rows(template_ids, langs, urls) -> pd.DataFrame:
+    n = len(template_ids)
+    return pd.DataFrame({
+        "url": urls,
+        "warc_ts": pd.date_range("2024-01-01", periods=n, freq="s"),
+        "lang": langs, "host": "h", "seq_no": range(n),
+        "template_id": pd.array(template_ids, dtype="Int64"),
+        "extracted_text": "x"})
+
+
+def test_enrich_misses_are_null_like_the_oracle(spark, oracle_result):
+    """A lang outside LANG_DIM, a tld outside TLD_DIM, a url that does not
+    match TLD_REGEX and a dead-letter template_id each enrich to NULL,
+    as the oracle's left joins give."""
+    cat = oracle_result.catalog
+    pdf = _parsed_rows(
+        [0, 1, None, len(cat) - 1, 2, None],
+        ["en", "xx", "fr", None, "zh", "de"],
+        ["https://a.example.com/p/0", "https://b.example.io/p/1",
+         "ftp://c.example.com/p/2", "not a url", "https://d.example.cn:8080/x",
+         "https://e.example.de"])
+    _assert_enrich_matches_oracle(spark, pdf, cat)
+    got = enrich_op.enrich(spark.createDataFrame(pdf, schemas.PARSED), cat) \
+        .toPandas().set_index("url")
+    assert got.loc["https://b.example.io/p/1", ["lang_family", "tld_region"]] \
+        .isna().all()
+    assert got.loc["ftp://c.example.com/p/2", ["tld", "freq", "freq_rank"]] \
+        .isna().all()
+
+
+def test_enrich_wide_catalog_indexes_every_id(spark):
+    """A 48k-template catalog: the first, last and random ids (and ties in
+    freq, ranked first-come) must read their own frequency row, so an
+    off-by-one in the array index fails; building the plan stays O(1)
+    in py4j calls."""
+    import time
+
+    import numpy as np
+    n = 48_000
+    rng = np.random.default_rng(11)
+    cat = pd.DataFrame({"template_id": np.arange(n, dtype="int64"),
+                        "freq": rng.integers(1, 500, n).astype("int64")})
+    ids = [0, 1, 2, n - 2, n - 1, None] + \
+        rng.integers(0, n, 200).tolist()
+    pdf = _parsed_rows(ids, ["en"] * len(ids),
+                       [f"https://h.example.com/p/{i}" for i in range(len(ids))])
+    _assert_enrich_matches_oracle(spark, pdf, cat)
+    df = spark.createDataFrame(pdf, schemas.PARSED)
+    t0 = time.perf_counter()
+    enrich_op.enrich(df, cat)
+    # measured ~0.1 s; a per-entry F.lit build costs ~1 ms per entry
+    assert time.perf_counter() - t0 < 5.0
+    with pytest.raises(ValueError, match="dense"):
+        enrich_op.enrich(df, cat.iloc[1:])
+
+
+def test_stage_outputs_have_declared_schemas(spark, workspace):
+    """The runner reads parsed, scored and the catalog with the schemas
+    ``schemas`` declares; what the stages wrote must have exactly those
+    field names and types."""
+    res = workspace["result"]
+    for path, declared in ((res["parsed_path"], schemas.PARSED),
+                           (res["scored_path"], schemas.SCORED),
+                           (res["catalog_path"], schemas.CATALOG)):
+        got = spark.read.parquet(path).schema
+        assert [(f.name, f.dataType) for f in got] == \
+            [(f.name, f.dataType) for f in declared], path
+
+
+def test_pages_without_contract_column_raises(spark, pages_df, tmp_path):
+    """A declared read would give a missing column as NULLs: a pages table
+    written without ``host`` must raise before any stage is marked done."""
+    pages_path = str(tmp_path / "pages")
+    pages_src.write_pages(
+        pages_src.pages_to_spark(spark, pages_df.head(200)).drop("host"),
+        pages_path, n_buckets=2)
+    work = str(tmp_path / "work")
+    with pytest.raises(ValueError, match="host"):
+        PipelineRunner(spark, pages_path, work).run()
+    assert Manifest.load(os.path.join(work, "manifest.json")).entries == {}
+
+
+def test_footer_sink_counts_equal_routed_counts(spark, workspace, oracle_result):
+    """The per-sink counts the route stage takes from its parquet footers
+    equal ``route.sink_counts`` over the routed rows, n_urls (distinct
+    urls) included, and the oracle's per-sink nunique(url)."""
+    res = workspace["result"]
+    routed = spark.read.parquet(res["routed_path"])
+    assert res["sink_counts"] == \
+        [r.asDict() for r in route_op.sink_counts(routed).collect()]
+    exp = oracle_result.scored.groupby("severity")["url"].nunique()
+    assert {c["severity"]: c["n_urls"] for c in res["sink_counts"]} == exp.to_dict()
+
+
+def test_runner_job_budget(spark, workspace, tmp_path):
+    """One full run launches only the Spark jobs that read or write stage
+    data: enrich and route one job each, none outside a stage, at most
+    10 in all.  Each stage runs under its own job group (job counts per
+    group accumulate over the session, so the groups are fresh)."""
+    import uuid
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    runner = PipelineRunner(spark, workspace["pages_path"], str(tmp_path / "work"))
+    tag = uuid.uuid4().hex[:8]
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    inner = runner._stage
+
+    def _stage(name, *args, **kwargs):
+        sc.setJobGroup(f"{tag}-{name}", name)
+        try:
+            return inner(name, *args, **kwargs)
+        finally:
+            sc.setJobGroup(f"{tag}-outside", "outside any stage")
+    runner._stage = _stage
+    try:
+        sc.setJobGroup(f"{tag}-outside", "outside any stage")
+        result = runner.run()
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    assert result["executed"] == PipelineRunner.STAGES
+    jobs = {g: len(tracker.getJobIdsForGroup(f"{tag}-{g}"))
+            for g in ["outside"] + PipelineRunner.STAGES}
+    assert jobs["enrich"] == 1 and jobs["route"] == 1, jobs
+    assert jobs["outside"] == 0, jobs
+    assert 0 < sum(jobs.values()) <= 10, jobs
 
 
 def test_fit_partition_invariance(spark, pages_df, oracle_result):

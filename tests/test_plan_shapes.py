@@ -33,15 +33,32 @@ def test_parse_scan_prunes_html(spark, pages_path, catalog_rows):
     assert "text" in read_schema
 
 
-def test_enrich_joins_are_broadcast(spark, pages_path, catalog_rows):
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                 "MapInArrow", "FlatMapGroupsInPandas")
+
+
+def test_enrich_is_one_projection(spark, pages_path, catalog_rows, tmp_path):
+    """Enrich serves its dims as Catalyst literals: over the parse it adds
+    no Join, no Exchange, no BroadcastExchange and no Python node (the
+    parse's own Arrow UDF stays the only one), and over the runner's
+    declared read of the parse output the plan has no Python at all."""
+    from ai_log_analyzer_spark import schemas
     from ai_log_analyzer_spark.operators import enrich as enrich_op
     from ai_log_analyzer_spark.operators import parse as parse_op
     parsed = parse_op.parse_pages(spark.read.parquet(pages_path), catalog_rows)
-    plan = _plan(enrich_op.enrich(parsed, catalog_rows))
-    assert plan.count("BroadcastHashJoin") == 3
-    assert "SortMergeJoin" not in plan
-    # fact side never shuffles for the joins
-    assert "Exchange hashpartitioning" not in plan.split("MapInPandas")[0]
+
+    def names(df):
+        return [n.nodeName() for n in
+                _nodes(df._jdf.queryExecution().executedPlan())]
+    got = names(enrich_op.enrich(parsed, catalog_rows))
+    assert not [n for n in got if "Join" in n or "Exchange" in n], got
+    python = [n for n in got if n in _PYTHON_NODES]
+    assert python and python == [n for n in names(parsed) if n in _PYTHON_NODES]
+    parsed.write.parquet(str(tmp_path / "parsed"))
+    read = spark.read.schema(schemas.PARSED).parquet(str(tmp_path / "parsed"))
+    got = names(enrich_op.enrich(read, catalog_rows))
+    assert not [n for n in got if "Join" in n or "Exchange" in n
+                or n in _PYTHON_NODES], got
 
 
 def test_bucket_filter_prunes_partitions(spark, pages_path):
