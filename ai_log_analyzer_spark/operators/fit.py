@@ -6,7 +6,7 @@ Distribution strategy (SURVEY.md §7 hard-part 1):
 
   pages ──(sortWithinPartitions warc_ts,url)──► mapInPandas(local fit)
         ──(collect ~KB of partial-template rows)──► driver canonical_refit
-        ──► frozen catalog (parquet snapshot)
+        ──► frozen catalog (parquet snapshot, written by the driver)
 
 Each partition runs the SAME online Drain the oracle runs, over its own
 slice in canonical (warc_ts, url) order; partial catalogs (template
@@ -15,14 +15,25 @@ merge deterministically on the driver.  At 100 TB the collect stays tiny
 because partials scale with *template cardinality*, not row count; the
 fit pass itself is embarrassingly parallel and can run on a sample
 (``sample_fraction``) since the merge dedupes.
+
+The merged catalog already lives on the driver, so ``write_catalog``
+writes the snapshot there with pyarrow: one ``part-00000-*.parquet``
+file with the ``schemas.CATALOG`` columns and types, and no Spark job.
+``read_catalog`` reads it back through Spark with the declared schema.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
 from typing import Iterator, List
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import schemas
 from ..catalog import CatalogEntry, fit_local, freeze, to_rows
@@ -79,9 +90,22 @@ def fit_catalog(pages: DataFrame, sample_fraction: float | None = None,
     return to_rows(freeze(tree))
 
 
-def write_catalog(spark: SparkSession, catalog_rows: pd.DataFrame, path: str):
-    spark.createDataFrame(catalog_rows, schema=schemas.CATALOG) \
-        .coalesce(1).write.mode("overwrite").parquet(path)
+_CATALOG_ARROW = to_arrow_schema(schemas.CATALOG)
+
+
+def write_catalog(catalog_rows: pd.DataFrame, path: str):
+    """Replace the snapshot dir ``path`` with one parquet file of
+    ``catalog_rows``, written by the driver.  The file is named like a
+    Spark task's part file (task 0), so lineage counts it as one writing
+    task, and it stays hidden until complete."""
+    table = pa.Table.from_pandas(catalog_rows[_CATALOG_ARROW.names],
+                                 schema=_CATALOG_ARROW, preserve_index=False)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+    tmp = os.path.join(path, "." + name)
+    pq.write_table(table.replace_schema_metadata(None), tmp)
+    os.replace(tmp, os.path.join(path, name))
 
 
 def read_catalog(spark: SparkSession, path: str) -> pd.DataFrame:

@@ -27,7 +27,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -78,19 +77,28 @@ def _catalog_token(catalog_rows: pd.DataFrame) -> str:
 _BC_CACHE: dict[str, object] = {}
 
 
-def _broadcast_for(sc, token: str, catalog_rows: pd.DataFrame):
-    key = f"{sc.applicationId}:{token}"
-    bc = _BC_CACHE.get(key)
+def cached_broadcast(cache: dict, sc, key: str, make):
+    """The broadcast of ``make()`` kept in ``cache`` under ``key`` for
+    this SparkContext, built on the first call only.  PySpark keeps each
+    broadcast's pickle file on the driver until ``destroy()``, so a fresh
+    broadcast per call of an unchanged value leaks one file per call.
+    At most ``_MATCHER_CACHE_CAP`` entries; the oldest is unpersisted
+    (not destroyed: a plan built earlier may still read it)."""
+    key = f"{sc.applicationId}:{key}"
+    bc = cache.get(key)
     if bc is None:
-        while len(_BC_CACHE) >= _MATCHER_CACHE_CAP:
-            old = _BC_CACHE.pop(next(iter(_BC_CACHE)))  # FIFO, oldest first
+        while len(cache) >= _MATCHER_CACHE_CAP:
+            old = cache.pop(next(iter(cache)))  # FIFO, oldest first
             try:
                 old.unpersist(blocking=False)
             except Exception:  # noqa: BLE001 — stopped context
                 pass
-        bc = sc.broadcast(catalog_rows)
-        _BC_CACHE[key] = bc
+        bc = cache[key] = sc.broadcast(make())
     return bc
+
+
+def _broadcast_for(sc, token: str, catalog_rows: pd.DataFrame):
+    return cached_broadcast(_BC_CACHE, sc, token, lambda: catalog_rows)
 
 
 def _cached_matcher(token: str, bc):
@@ -125,12 +133,14 @@ def parse_pages(pages: DataFrame, catalog_rows: pd.DataFrame) -> DataFrame:
                 "extracted_text": m["extracted_text"],
             })
 
+    # SQL strings over ``F.*`` column functions: fewer py4j round trips per
+    # build (see windows.window_score_grouped)
     return (pages
             .select("url", "warc_ts", "lang", "host", "seq_no",
-                    _parse(F.col("text")).alias("_p"))
-            .select("url", "warc_ts", "lang", "host", "seq_no",
-                    F.col("_p.template_id").alias("template_id"),
-                    F.col("_p.extracted_text").alias("extracted_text")))
+                    _parse("text").alias("_p"))
+            .selectExpr("url", "warc_ts", "lang", "host", "seq_no",
+                        "_p.template_id AS template_id",
+                        "_p.extracted_text AS extracted_text"))
 
 
 # perfbench/worker.py reports it; drop at the next benchmark revision
@@ -163,10 +173,17 @@ def parse_template_ids(pages: DataFrame, catalog_rows: pd.DataFrame) -> DataFram
         for text in batches:
             yield matcher.match_ids(text)
 
+    # Nondeterministic is PySpark's documented guard against the
+    # optimizer duplicating a UDF: without it a ``template_id IS NOT
+    # NULL`` filter (``matched``, the stream's dead-letter filter) is
+    # pushed below this projection and the plan runs the Matcher twice
+    # per row, once for the Filter and once for the Project.  The ids
+    # themselves are a pure function of (text, catalog).
     return pages.select("url", "warc_ts", "lang", "host", "seq_no",
-                        _match(F.col("text")).alias("template_id"))
+                        _match.asNondeterministic()("text")
+                        .alias("template_id"))
 
 
 def matched(parsed: DataFrame) -> DataFrame:
-    return parsed.filter(F.col("template_id").isNotNull())
+    return parsed.filter("template_id IS NOT NULL")
 

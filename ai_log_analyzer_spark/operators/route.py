@@ -27,15 +27,16 @@ from .. import scorer
 
 
 def with_severity(scored: DataFrame) -> DataFrame:
-    s, a = F.col("anomaly_score"), F.col("is_anomaly")
-    sev = (
-        F.when(a & (s >= scorer.T_HI), "crit")
-        .when(a, "high")
-        .when(s >= scorer.T_HI, "med")
-        .when(s >= scorer.T_LO, "low")
-        .otherwise("info")
-    )
-    return scored.withColumn("severity", sev)
+    # one SQL string: each ``F.when``/``F.col`` call costs ~10 py4j round
+    # trips (see windows.window_score_grouped); ``D`` makes the
+    # thresholds the exact doubles of scorer.py
+    hi, lo = f"{scorer.T_HI!r}D", f"{scorer.T_LO!r}D"
+    return scored.selectExpr("*", f"""CASE
+        WHEN is_anomaly AND anomaly_score >= {hi} THEN 'crit'
+        WHEN is_anomaly THEN 'high'
+        WHEN anomaly_score >= {hi} THEN 'med'
+        WHEN anomaly_score >= {lo} THEN 'low'
+        ELSE 'info' END AS severity""")
 
 
 def write_sinks(routed: DataFrame, base_path: str):

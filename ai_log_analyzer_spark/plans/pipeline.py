@@ -19,9 +19,21 @@ Each stage launches only the Spark jobs that read or write its data:
   stage's per-sink counts are sums per ``severity=`` directory, both
   read on the driver from the parquet footers the stage's write just
   produced (route.py states why the footer counts give ``n_urls``);
-- enrich is one projection with literal dims (operators/enrich.py).
+- enrich is one projection with literal dims (operators/enrich.py);
+- the fit stage's catalog snapshot is written by the driver with
+  pyarrow (operators/fit.py): the driver already holds the rows.
 The workdir must therefore be visible to the driver's file system, as
 it already is for the manifest and the fingerprints.
+
+The critical path is fit → parse → score → route.  Nothing reads the
+``enriched`` table (score reads ``parsed``, route reads ``scored``), so
+``enrich`` runs on one extra driver thread beside score → route, still
+through ``_stage``.  The thread is a ``pyspark.InheritableThread``: it
+starts with the caller's job group, description and tags, and its own
+``setJobGroup``/``setJobDescription`` calls stay its own.  ``run()``
+joins it before returning or raising, so no Spark job of a run outlives
+``run()``; manifest saves are serialized and ``executed`` is reported
+in ``STAGES`` order.
 """
 
 from __future__ import annotations
@@ -30,6 +42,7 @@ import hashlib
 import json
 import os
 import re
+import threading
 import time
 import uuid
 from collections import Counter
@@ -37,6 +50,7 @@ from dataclasses import dataclass, field
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark import InheritableThread
 from pyspark.sql import SparkSession
 
 from .. import schemas
@@ -99,6 +113,10 @@ _PART_TASK = re.compile(r"part-(\d+)-")   # Spark's part-<task id>-<job uuid>...
 class Manifest:
     path: str
     entries: dict = field(default_factory=dict)
+    # enrich marks its entry from its own thread: one writer at a time
+    # of the dict and of the shared ``.tmp`` file
+    _lock: threading.Lock = field(default_factory=threading.Lock,
+                                  repr=False, compare=False)
 
     @classmethod
     def load(cls, path: str) -> "Manifest":
@@ -119,9 +137,10 @@ class Manifest:
         return bool(e and e.get("status") == "done" and e.get("input_fp") == fp)
 
     def mark(self, stage: str, fp: str, rows: int, wall_s: float):
-        self.entries[stage] = {"status": "done", "input_fp": fp,
-                               "rows": rows, "wall_s": round(wall_s, 3)}
-        self.save()
+        with self._lock:
+            self.entries[stage] = {"status": "done", "input_fp": fp,
+                                   "rows": rows, "wall_s": round(wall_s, 3)}
+            self.save()
 
 
 class PipelineRunner:
@@ -189,12 +208,12 @@ class PipelineRunner:
         pages_fp = _fingerprint(self.pages_path)
         pages = _read_pages(self.spark, self.pages_path)
 
-        # fit: frozen catalog snapshot
+        # fit: frozen catalog snapshot, written by the driver
         fitted = []
 
         def _fit(out):
             cat = fit_op.fit_catalog(pages, sample_fraction=self.fit_sample)
-            fit_op.write_catalog(self.spark, cat, out)
+            fit_op.write_catalog(cat, out)
             fitted.append(cat)
         cat_path = self._stage("fit", pages_fp, _fit, "catalog")
         # the snapshot is read back only on resume; a fit that ran here
@@ -210,13 +229,21 @@ class PipelineRunner:
         parse_fp = pages_fp + ":" + _fingerprint(cat_path)
         parsed_path = self._stage("parse", parse_fp, _parse, "parsed")
 
-        # enrich: one projection, literal dims
+        # enrich: one projection, literal dims; nothing downstream reads
+        # it, so it runs on its own thread beside score -> route
         def _enrich(out):
             parsed = self.spark.read.schema(schemas.PARSED).parquet(parsed_path)
             enrich_op.enrich(parsed, catalog_rows) \
                 .write.mode("overwrite").parquet(out)
         enr_fp = _fingerprint(parsed_path)
-        enriched_path = self._stage("enrich", enr_fp, _enrich, "enriched")
+        enrich_err: list[BaseException] = []
+
+        def _enrich_branch():
+            try:
+                self._stage("enrich", enr_fp, _enrich, "enriched")
+            except BaseException as e:  # noqa: BLE001 — re-raised by run()
+                enrich_err.append(e)
+        branch = InheritableThread(target=_enrich_branch, session=self.spark)
 
         # windows + frozen scorer (shuffle #1: by host)
         def _score(out):
@@ -224,7 +251,6 @@ class PipelineRunner:
             win_op.window_score_grouped(parse_op.matched(parsed), num_classes,
                                         host_lookup=parsed) \
                 .write.mode("overwrite").parquet(out)
-        scored_path = self._stage("score", enr_fp, _score, "scored")
 
         # route: severity + fan-out sinks; per-sink counts from footers
         def _route(out):
@@ -235,16 +261,28 @@ class PipelineRunner:
             with open(tmp, "w") as f:
                 json.dump(counts, f)
             os.replace(tmp, os.path.join(out, SINK_COUNTS))
-        routed_path = self._stage("route", _fingerprint(scored_path), _route,
-                                  "routed", done_file=SINK_COUNTS)
+
+        # started before score, not after it (overlapping route only):
+        # both measured the same at local[2], and this way enrich hides
+        # behind score, the branch that grows fastest with data
+        branch.start()
+        try:
+            scored_path = self._stage("score", enr_fp, _score, "scored")
+            routed_path = self._stage("route", _fingerprint(scored_path),
+                                      _route, "routed", done_file=SINK_COUNTS)
+        finally:
+            branch.join()   # a failing branch raises only after the other ends
+        if enrich_err:
+            raise enrich_err[0]
+        self.executed.sort(key=self.STAGES.index)
 
         with open(os.path.join(routed_path, SINK_COUNTS)) as f:
             counts = json.load(f)
         return {
             "run_id": self.run_id,
             "catalog_path": cat_path, "parsed_path": parsed_path,
-            "enriched_path": enriched_path, "scored_path": scored_path,
-            "routed_path": routed_path,
+            "enriched_path": os.path.join(self.workdir, "enriched"),
+            "scored_path": scored_path, "routed_path": routed_path,
             "num_classes": num_classes,
             "sink_counts": counts,
             "executed": list(self.executed),

@@ -196,6 +196,17 @@ def score_stream_stateful(matched_stream: DataFrame, num_classes: int,
                                     "append", GroupStateTimeout.NoTimeout))
 
 
+def stateful_scores(spark: SparkSession, pages_path: str,
+                    catalog_rows: pd.DataFrame, num_classes: int,
+                    max_files_per_trigger: int | None = None) -> DataFrame:
+    """The streaming frame ``run_stateful_scores_to_parquet`` sinks:
+    pages stream → id-only parse → dead letters dropped → stateful
+    scorer."""
+    stream = read_pages_stream(spark, pages_path, max_files_per_trigger)
+    parsed = parse_op.parse_template_ids(stream, catalog_rows)
+    return score_stream_stateful(parse_op.matched(parsed), num_classes)
+
+
 def run_stateful_scores_to_parquet(spark: SparkSession, pages_path: str,
                                    catalog_rows: pd.DataFrame,
                                    num_classes: int,
@@ -209,10 +220,8 @@ def run_stateful_scores_to_parquet(spark: SparkSession, pages_path: str,
     recover) and appends only the newly scored rows; a mid-corpus
     restart therefore yields the identical row set the batch stage
     produces (pinned by tests/test_streaming_stateful.py)."""
-    stream = read_pages_stream(spark, pages_path, max_files_per_trigger)
-    parsed = parse_op.parse_template_ids(stream, catalog_rows)
-    scored = score_stream_stateful(
-        parsed.filter(F.col("template_id").isNotNull()), num_classes)
+    scored = stateful_scores(spark, pages_path, catalog_rows, num_classes,
+                             max_files_per_trigger)
     q = (scored.writeStream.format("parquet")
          .option("path", out_path)
          .option("checkpointLocation", checkpoint)

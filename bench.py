@@ -46,7 +46,7 @@ def run_pipeline(spark, pages_path: str):
     pages = spark.read.parquet(pages_path)
     cat_path = pages_path + "_catalog"
     if not os.path.exists(cat_path):
-        fit_op.write_catalog(spark, fit_op.fit_catalog(pages), cat_path)
+        fit_op.write_catalog(fit_op.fit_catalog(pages), cat_path)
     cat = fit_op.read_catalog(spark, cat_path)
 
     t0 = time.time()

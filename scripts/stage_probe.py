@@ -15,12 +15,17 @@ caller.  Stages:
   pytask    - corpus-free fixed Python cost per task: cores * 8 one-row
               identity mapInPandas tasks; also prints wall * cores / tasks
   e2e2      - full parse->windows->score->route pipeline
+  runner    - full PipelineRunner.run() into a fresh workdir; also
+              prints the median warm wall and the median per-stage walls
+              of the runner's manifest
 
 Usage: python scripts/stage_probe.py STAGE N_ROWS [RUNS]
 Prints one JSON line; cores from SPARK_GRAFT_CPUS.
 """
 import json
 import os
+import shutil
+import statistics
 import sys
 import time
 
@@ -53,7 +58,7 @@ def main():
         pages_path = bench.ensure_pages(spark, n_rows)
         cat_path = pages_path + "_catalog"
         if not os.path.exists(cat_path):
-            fit_op.write_catalog(spark, fit_op.fit_catalog(
+            fit_op.write_catalog(fit_op.fit_catalog(
                 spark.read.parquet(pages_path)), cat_path)
         cat = fit_op.read_catalog(spark, cat_path)
         pages = spark.read.parquet(pages_path)
@@ -63,6 +68,7 @@ def main():
         parse_op.parse_pages(pages, cat).write.mode("overwrite").parquet(parsed_path)
 
     py_tasks = cores * 8
+    stage_walls = []            # runner: the manifest's wall_s per run
 
     def job():
         if stage == "scan":
@@ -183,14 +189,28 @@ def main():
                                                  len(cat), host_lookup=pages)
             routed = route_op.with_severity(scored)
             route_op.sink_counts(routed).collect()
+        elif stage == "runner":
+            from ai_log_analyzer_spark.plans.pipeline import PipelineRunner
+            work = pages_path + "_runner"
+            shutil.rmtree(work, ignore_errors=True)
+            runner = PipelineRunner(spark, pages_path, work)
+            runner.run()
+            stage_walls.append({k: v["wall_s"]
+                                for k, v in runner.manifest.entries.items()})
         else:
             raise SystemExit(f"unknown stage {stage}")
 
     job()  # warmup (worker cold start, codegen)
-    best = min((lambda t0: (job(), time.time() - t0)[1])(time.time())
-               for _ in range(runs))
+    del stage_walls[:]
+    walls = [(lambda t0: (job(), time.time() - t0)[1])(time.time())
+             for _ in range(runs)]
+    best = min(walls)
     out = {"stage": stage, "cores": cores, "rows": n_rows,
            "wall_s": round(best, 3), "rows_per_s": round(n_rows / best, 1)}
+    if stage == "runner":
+        out.update(median_wall_s=round(statistics.median(walls), 3),
+                   stage_wall_s={k: round(statistics.median(w[k] for w in stage_walls), 3)
+                                 for k in stage_walls[0]})
     if stage == "pytask":
         out.update(tasks=py_tasks, s_per_task=round(best * cores / py_tasks, 3))
     print(json.dumps(out))

@@ -11,11 +11,14 @@ Asserts, on the same deterministic pages corpus:
 - lineage: one row per writing task, read from parquet footers
 - enrichment: every enrichment column per url equals the oracle's
 - job budget: each runner stage launches only the jobs that move data
+- the driver-written catalog snapshot, and the enrich branch that runs
+  beside score → route: its failures, its manifest entry, its thread
 - property 3c: catalog invariant to input partition count
 """
 
 import json
 import os
+import threading
 
 import pandas as pd
 import pytest
@@ -364,9 +367,11 @@ def test_footer_sink_counts_equal_routed_counts(spark, workspace, oracle_result)
 
 def test_runner_job_budget(spark, workspace, tmp_path):
     """One full run launches only the Spark jobs that read or write stage
-    data: enrich and route one job each, none outside a stage, at most
-    10 in all.  Each stage runs under its own job group (job counts per
-    group accumulate over the session, so the groups are fresh)."""
+    data: fit (its collect; the snapshot is driver-written), enrich and
+    route one job each, none outside a stage, at most 8 in all.  Each
+    stage runs under its own job group, set on the thread that runs the
+    stage (job counts per group accumulate over the session, so the
+    groups are fresh)."""
     import uuid
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -393,9 +398,138 @@ def test_runner_job_budget(spark, workspace, tmp_path):
     assert result["executed"] == PipelineRunner.STAGES
     jobs = {g: len(tracker.getJobIdsForGroup(f"{tag}-{g}"))
             for g in ["outside"] + PipelineRunner.STAGES}
-    assert jobs["enrich"] == 1 and jobs["route"] == 1, jobs
+    assert jobs["fit"] == 1 and jobs["enrich"] == 1 and jobs["route"] == 1, jobs
     assert jobs["outside"] == 0, jobs
-    assert 0 < sum(jobs.values()) <= 10, jobs
+    assert 0 < sum(jobs.values()) <= 8, jobs
+
+
+def test_catalog_snapshot_is_one_driver_written_file(spark, workspace, tmp_path):
+    """The fit stage's snapshot is one ``part-00000-*.parquet`` file with
+    the CATALOG columns and types; it reads back through ``read_catalog``
+    equal to the fitted rows, and its lineage row is task 0.  Writing
+    again replaces the file."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    res = workspace["result"]
+    cat_path = res["catalog_path"]
+    [name] = [f for f in os.listdir(cat_path) if not f.startswith(("_", "."))]
+    assert name.startswith("part-00000-") and name.endswith(".parquet")
+    assert pq.read_schema(os.path.join(cat_path, name)).remove_metadata() == \
+        to_arrow_schema(schemas.CATALOG)
+    fitted = fit_op.fit_catalog(spark.read.parquet(workspace["pages_path"]))
+    pd.testing.assert_frame_equal(fit_op.read_catalog(spark, cat_path), fitted)
+    lin = _read_lineage(str(workspace["base"] / "work"))
+    fit_lin = lin[(lin["run_id"] == res["run_id"]) & (lin["stage"] == "fit")]
+    assert fit_lin["partition_id"].tolist() == [0]
+    assert fit_lin["rows"].tolist() == [len(fitted)]
+    again = str(tmp_path / "catalog")
+    fit_op.write_catalog(fitted, again)
+    fit_op.write_catalog(fitted.head(3), again)
+    assert len([f for f in os.listdir(again) if f.endswith(".parquet")]) == 1
+    pd.testing.assert_frame_equal(fit_op.read_catalog(spark, again),
+                                  fitted.head(3))
+
+
+def test_concurrent_run_keeps_stage_order_and_manifest(workspace):
+    """A fresh run reports ``executed`` in STAGES order although enrich
+    ran on its own thread, and the manifest on disk holds all 5 entries."""
+    assert workspace["result"]["executed"] == PipelineRunner.STAGES
+    on_disk = Manifest.load(
+        os.path.join(str(workspace["base"] / "work"), "manifest.json")).entries
+    assert sorted(on_disk) == sorted(PipelineRunner.STAGES)
+    assert all(e["status"] == "done" for e in on_disk.values())
+
+
+def test_manifest_concurrent_marks(tmp_path):
+    """Marks from several threads never corrupt or lose an entry."""
+    path = str(tmp_path / "manifest.json")
+    m = Manifest.load(path)
+
+    def _marks(i):
+        for j in range(50):
+            m.mark(f"s{i}", "fp", j, 0.0)
+    threads = [threading.Thread(target=_marks, args=(i,)) for i in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert Manifest.load(path).entries == {
+        f"s{i}": {"status": "done", "input_fp": "fp", "rows": 49, "wall_s": 0.0}
+        for i in range(8)}
+
+
+def _other_threads():
+    """Live non-daemon threads other than the main thread."""
+    return {t for t in threading.enumerate()
+            if not t.daemon and t is not threading.main_thread()}
+
+
+def test_failing_enrich_raises_after_score_and_route(spark, workspace, tmp_path,
+                                                     monkeypatch):
+    """An enrich failure reaches the caller only after score and route
+    are done; enrich is not marked done, so the next run reruns it alone."""
+    def _fail(parsed, catalog_rows):
+        raise RuntimeError("enrich failed")
+    work = str(tmp_path / "work")
+    threads = _other_threads()
+    with monkeypatch.context() as mp:
+        mp.setattr(enrich_op, "enrich", _fail)
+        with pytest.raises(RuntimeError, match="enrich failed"):
+            PipelineRunner(spark, workspace["pages_path"], work).run()
+    assert _other_threads() == threads
+    entries = Manifest.load(os.path.join(work, "manifest.json")).entries
+    assert sorted(entries) == ["fit", "parse", "route", "score"]
+    assert os.path.exists(os.path.join(work, "routed", "_sink_counts.json"))
+    out = PipelineRunner(spark, workspace["pages_path"], work).run()
+    assert out["executed"] == ["enrich"]
+    assert out["sink_counts"] == workspace["result"]["sink_counts"]
+
+
+def test_failing_score_waits_for_enrich(spark, workspace, tmp_path, monkeypatch):
+    """A score failure reaches the caller only after the enrich branch
+    has finished: enrich is marked done, no thread of the run is left and
+    no Spark job of it is still running."""
+    import time
+
+    from ai_log_analyzer_spark.operators import windows as win_op
+    real_enrich = enrich_op.enrich
+
+    def _slow_enrich(parsed, catalog_rows):
+        time.sleep(1.0)
+        return real_enrich(parsed, catalog_rows)
+
+    def _fail(*args, **kwargs):
+        raise RuntimeError("score failed")
+    work = str(tmp_path / "work")
+    threads = _other_threads()
+    with monkeypatch.context() as mp:
+        mp.setattr(enrich_op, "enrich", _slow_enrich)
+        mp.setattr(win_op, "window_score_grouped", _fail)
+        with pytest.raises(RuntimeError, match="score failed"):
+            PipelineRunner(spark, workspace["pages_path"], work).run()
+    assert _other_threads() == threads
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    entries = Manifest.load(os.path.join(work, "manifest.json")).entries
+    assert sorted(entries) == ["enrich", "fit", "parse"]
+
+
+def test_weights_broadcast_is_built_once(spark, workspace):
+    """Repeated windows+score builds over one catalog reuse one weights
+    broadcast: the driver's broadcast files do not grow."""
+    from ai_log_analyzer_spark.operators import parse as parse_op
+    from ai_log_analyzer_spark.operators import windows as win_op
+    sc = spark.sparkContext
+    parsed = spark.read.parquet(workspace["result"]["parsed_path"])
+    ncls = workspace["result"]["num_classes"]
+
+    def _build():
+        return win_op.window_score_grouped(parse_op.matched(parsed), ncls,
+                                           host_lookup=parsed)
+    _build()
+    before = sorted(os.listdir(sc._temp_dir))
+    for _ in range(3):
+        _build()
+    assert sorted(os.listdir(sc._temp_dir)) == before
 
 
 def test_fit_partition_invariance(spark, pages_df, oracle_result):

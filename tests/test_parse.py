@@ -27,6 +27,15 @@ def test_parse_ids_is_one_arrow_udf(spark, pages_df, grammar_catalog):
     assert plan.count("ArrowEvalPython") == 1
 
 
+def test_matched_parse_ids_runs_the_udf_once(spark, pages_df, grammar_catalog):
+    """The dead-letter filter of ``matched`` must not be pushed below the
+    parse: one ArrowEvalPython feeds both the filter and the ids."""
+    pages = pages_src.pages_to_spark(spark, pages_df)
+    plan = (parse_op.matched(parse_op.parse_template_ids(pages, grammar_catalog))
+            ._jdf.queryExecution().executedPlan().toString())
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def test_dead_letter_and_whitespace_quirks(spark, grammar_catalog):
     """Unknown shapes → NULL; leading/trailing/inner whitespace follow
     the Matcher's anchored-regex quirks (one trailing \\n is tolerated,

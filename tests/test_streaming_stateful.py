@@ -94,6 +94,22 @@ def test_stateful_stream_multiple_batches_ran(spark, split_corpus,
     assert got.count() == expected_total
 
 
+def test_stateful_stream_runs_the_parse_udf_once(spark, split_corpus,
+                                                tmp_path):
+    """The stream's dead-letter filter is not pushed below the parse: a
+    micro-batch's executed plan holds one ArrowEvalPython, which feeds
+    both the filter and the scorer."""
+    path, cat = split_corpus
+    q = (SP.stateful_scores(spark, path, cat, len(cat), max_files_per_trigger=2)
+         .writeStream.format("parquet")
+         .option("path", str(tmp_path / "out"))
+         .option("checkpointLocation", str(tmp_path / "ckpt"))
+         .outputMode("append").trigger(availableNow=True).start())
+    q.awaitTermination()
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def _drain_with_restart(spark, path, cat, tmp_path, first_partitions=None):
     """Drain chunks 0-1, stop, land chunks 2-3 and re-run on the SAME
     checkpoint.  ``first_partitions`` sets the session's shuffle-
